@@ -10,24 +10,24 @@ import org.apache.spark.sql.functions._
   * Normal-Wishart hyperpriors; Macau arXiv:1509.04610 §2.3 multi-
   * relation coupling, §2.4 tensors, §3.2 side-information link term).
   *
-  * Execution model (SURVEY.md §3.1): observations stay distributed in
-  * COO DataFrames; each sweep ships the (small) opposite-mode factor
-  * matrices to executors as broadcasts — the Spark analog of the
-  * reference's SharedArray zero-copy factors — and draws every entity's
-  * K-dim conditional IN PARALLEL via a groupBy over the entity's
-  * observations (the IndexedDF inverted index materialized by the
-  * shuffle, reused via persisted COO). K x K math is breeze; the
-  * per-entity draw is a counter-based pure function of
-  * (seed, iter, entity), so results are independent of partitioning.
-  *
-  * Scale path (documented, not needed at test scale): when a factor
-  * matrix outgrows broadcast, swap the broadcast for the ALS block
-  * exchange (org.apache.spark.ml.recommendation.ALS's in/out block
-  * structure) — the sweep below is already shaped for it because every
-  * update only needs (cells of entity i) x (opposite factors of those
-  * cells).
+  * [[train]] validates its input, then runs one of two execution modes
+  * that differ only in how an entity's observed cells meet the
+  * opposite-mode factors and where the factors live:
+  *  - broadcast (this object): observations stay distributed in
+  *    persisted COO DataFrames; each sweep ships the (small) factor
+  *    matrices from the driver to executors as broadcasts — the Spark
+  *    analog of the reference's SharedArray zero-copy factors — and
+  *    groups every entity's cells by id (the IndexedDF inverted index);
+  *  - distributed ([[GibbsDistributed]]): factor tables stay DataFrames
+  *    and reach the cells through joins.
+  * Both modes hand each entity's (z, v, aw) rows to the one kernel in
+  * [[Conditional]] (conditional draw, prior draw, probit latent) and
+  * fold post-burn-in samples through one [[Posterior]]. Every draw is a
+  * counter-based pure function of (seed, iter, entity, id), so results
+  * do not depend on partitioning.
   */
 object Gibbs {
+  import Conditional.{lowerSolve, upperSolveT}
 
   final case class Options(
       numLatent: Int = 16,
@@ -135,32 +135,18 @@ object Gibbs {
         * bounds via Macau.empiricalCredible. */
       samplePreds: Option[DataFrame] = None)
 
-  /** Evenly-spaced thinning: retain sample `s` (0-based of `total`)
-    * iff the integer selector floor((s+1)*keep/total) advances at s —
-    * exactly `min(keep, total)` samples, evenly spread, no RNG. */
-  private[bdf] def retainSample(s: Int, total: Int, keep: Int): Boolean =
-    keep > 0 &&
-      ((s + 1).toLong * keep) / total > (s.toLong * keep) / total
-
   /** Driver-resident doubles the broadcast mode would allocate: the
     * N x K factor matrix per entity plus the densified N x F side
     * matrix where side info is attached (sparse side features count at
     * their dense width — that is what the broadcast path materializes). */
   private[bdf] def broadcastFootprint(rd: RelationData, k: Int): Long =
-    rd.entities.valuesIterator.map { ent =>
-      val f: Long = ent.side.map { df =>
-        if (df.columns.contains("indices")) {
-          val mx = df.select(max(expr("array_max(indices)"))).head()
-          if (mx.isNullAt(0)) 0L else mx.getInt(0) + 1L
-        } else df.select(expr("size(features)")).head().getInt(0).toLong
-      }.getOrElse(0L)
-      ent.numItems.toLong * (k + f)
-    }.sum
+    rd.entities.valuesIterator.map(ent => ent.numItems.toLong * (k + ent.sideWidth)).sum
 
   def train(spark: SparkSession, rd: RelationData, test: DataFrame,
             opts: Options): Result = {
     require(!(opts.binaryProbit && opts.sampleAlpha),
       "binaryProbit fixes alpha = 1; disable sampleAlpha")
+    rd.validate()
     // auto mode switch: an explicit flag wins; otherwise route by the
     // broadcast mode's would-be driver footprint
     val useDistributed = opts.distributedFactors.getOrElse(
@@ -192,15 +178,14 @@ object Gibbs {
     // distributed and run CG with DataFrame matvecs — see
     // GibbsDistributed, which also keeps sparse rows sparse). A sparse
     // (indices, values) side table is densified here: this path is the
-    // small-data one by construction.
+    // small-data one by construction. Dense features are checked for
+    // finiteness as they are copied, so that check costs no job (a
+    // sparse table's width job checks its values).
     val sideData: Map[String, Array[Array[Double]]] = rd.entities.collect {
-      case (name, Entity(_, n, Some(sideDf))) =>
+      case (name, ent @ Entity(_, n, Some(sideDf))) =>
         val arr = Array.ofDim[Array[Double]](n)
         if (sideDf.columns.contains("indices")) {
-          val mx = sideDf.select(max(expr("array_max(indices)"))).head()
-          require(!mx.isNullAt(0),
-            s"sparse side table for entity $name has no nonzero features")
-          val fDim = mx.getInt(0) + 1
+          val fDim = ent.sideWidth
           sideDf.select(col("id").cast("long"), col("indices"), col("values"))
             .collect().foreach { r =>
               val dense = new Array[Double](fDim)
@@ -211,7 +196,11 @@ object Gibbs {
             }
         } else {
           sideDf.select(col("id").cast("long"), col("features")).collect().foreach { r =>
-            arr(r.getLong(0).toInt) = r.getSeq[Double](1).toArray
+            val xs = r.getSeq[Double](1)
+            require(xs.forall(x => java.lang.Double.isFinite(x)),
+              s"entity $name side table: non-finite value in column features at row " +
+                s"(id=${r.getLong(0)}, features=${xs.mkString("[", ",", "]")})")
+            arr(r.getLong(0).toInt) = xs.toArray
           }
         }
         // ids absent from the side table (legal: a sparse COO source
@@ -231,16 +220,7 @@ object Gibbs {
 
     var alpha = opts.alpha
     var lastHyper: Map[String, NW] = Map.empty
-    val rmseHist = scala.collection.mutable.ArrayBuffer[Double]()
-    val sampleRmseHist = scala.collection.mutable.ArrayBuffer[Double]()
-
-    // running posterior mean over post-burnin samples, keyed by test row
-    var predSum: Option[DataFrame] = None
-    var nSamples = 0
-    // thinned per-sample retention (Options.keepSamples): each entry is
-    // its own checkpointed 3-col table, unioned lazily at the end —
-    // O(retained rows) materialized total, never O(n^2) re-unions
-    val keptSamples = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    val posterior = new Posterior(testCoo, opts)
 
     val sc = spark.sparkContext
 
@@ -295,7 +275,7 @@ object Gibbs {
               val bSelf = if (probit) sc.broadcast(toArrays(factors(e))) else null
               if (bSelf != null) sweepBcs += bSelf
               val seedL = opts.seed; val itL = iter.toLong
-              val relTag = r.name.hashCode.toLong ^ (m.toLong << 17) ^ 0x9b17L
+              val relTag = Conditional.relTag(r.name, m)
               coo.select(col("ids"), col("v")).as[(Seq[Long], Double)]
                 .map { case (ids, v) =>
                   // z = elementwise product of the other modes' latents
@@ -306,17 +286,10 @@ object Gibbs {
                     var j = 0
                     while (j < kk) { z(j) *= f(j); j += 1 }
                   }
-                  val vv = if (!probit) v else {
-                    // Albert-Chib: replace the 0/1 label by a truncated-
-                    // normal latent around the CURRENT prediction
-                    val self = bSelf.value(ids(m).toInt)
-                    var pred = 0.0
-                    var j = 0
-                    while (j < kk) { pred += z(j) * self(j); j += 1 }
-                    val ck = ids.foldLeft(0L)((acc, i) => acc * 1000003L + i)
-                    val u = CbRng.uniform(seedL, itL, relTag, ck)
-                    Probit.truncatedNormal(pred, v > 0.5, u)
-                  }
+                  // Albert-Chib: replace the 0/1 label by a truncated-
+                  // normal latent around the CURRENT prediction
+                  val vv = if (!probit) v else Conditional.probitLatent(
+                    z, bSelf.value(ids(m).toInt), ids, v, seedL, itL, relTag)
                   (ids(m), z, vv, aRel)
                 }.toDF("id", "z", "v", "aw")
           }
@@ -326,37 +299,17 @@ object Gibbs {
         val nw = hyper(e)
         val bMu = sc.broadcast(nw.mu.toArray)
         val bLam = sc.broadcast(nw.lambda.toArray) // column-major k*k
-        val bLink = sc.broadcast(linkMeans.get(e).map(toArrays).orNull)
+        val link = linkMeans.get(e).map(toArrays)
+        val bLink = sc.broadcast(link.orNull)
         val kk = k; val seed = opts.seed; val it = iter.toLong
-        val eHash = e.hashCode.toLong
 
         val drawn = all.as[(Long, Array[Double], Double, Double)]
           .groupByKey(_._1)
           .mapGroups { (id, rows) =>
-            val prec = new DenseMatrix[Double](kk, kk, bLam.value.clone())
-            val mu0 =
-              if (bLink.value != null) DenseVector(bMu.value) + DenseVector(bLink.value(id.toInt))
-              else DenseVector(bMu.value)
-            val rhs = prec * mu0
-            rows.foreach { case (_, z, v, aw) =>
-              var r0 = 0
-              while (r0 < kk) {
-                val zr = z(r0) * aw
-                var c0 = 0
-                while (c0 < kk) { prec(r0, c0) += zr * z(c0); c0 += 1 }
-                rhs(r0) += zr * v
-                r0 += 1
-              }
-            }
-            val l = cholesky(prec)
-            // mean = prec^-1 rhs via two triangular solves
-            val y = lowerSolve(l, rhs)
-            val mean = upperSolveT(l, y)
-            // sample: mean + L^-T eps  (counter-based, partition-invariant)
-            val eps = DenseVector.tabulate(kk)(j =>
-              CbRng.gaussian(seed, it, eHash, id, j.toLong))
-            val u = mean + upperSolveT(l, eps)
-            (id, u.toArray)
+            val mu0 = Conditional.shifted(bMu.value,
+              if (bLink.value == null) null else bLink.value(id.toInt))
+            (id, Conditional.draw(bLam.value, mu0,
+              rows.map { case (_, z, v, aw) => (z, v, aw) }, kk, seed, it, e, id))
           }.collect()
         // the per-sweep broadcasts (other-mode factors, probit self
         // factors, NW state) are dead after the collect — destroy them
@@ -368,31 +321,27 @@ object Gibbs {
         // fold drawn rows into the (driver) factor matrix; entities with
         // no observations keep a pure prior draw
         val f = factors(e)
-        val seen = new Array[Boolean](sizes(e))
-        drawn.foreach { case (id, u) =>
-          seen(id.toInt) = true
+        def put(i: Int, u: Array[Double]): Unit = {
           var j = 0
-          while (j < k) { f(id.toInt, j) = u(j); j += 1 }
+          while (j < k) { f(i, j) = u(j); j += 1 }
         }
-        var i = 0
-        while (i < sizes(e)) {
-          if (!seen(i)) {
-            val lChol = cholesky(nw.lambda)
-            val eps = DenseVector.tabulate(k)(j =>
-              CbRng.gaussian(opts.seed, iter.toLong, e.hashCode.toLong + 7L, i.toLong, j.toLong))
-            val mu0 =
-              if (linkMeans.contains(e)) nw.mu + linkMeans(e)(i, ::).t else nw.mu
-            val u = mu0 + upperSolveT(lChol, eps)
-            var j = 0
-            while (j < k) { f(i, j) = u(j); j += 1 }
-          }
-          i += 1
+        val seen = new Array[Boolean](sizes(e))
+        drawn.foreach { case (id, u) => seen(id.toInt) = true; put(id.toInt, u) }
+        if (seen.contains(false)) {
+          val lChol = Conditional.priorFactor(nw.lambda, e, it)
+          val mu = nw.mu.toArray
+          for (i <- 0 until sizes(e) if !seen(i))
+            put(i, Conditional.prior(lChol, Conditional.shifted(mu, link.map(_(i)).orNull),
+              k, seed, it, e, i.toLong))
         }
       }
 
       // -- (d) noise precision draw from residuals (Macau §2.1) --
       if (opts.sampleAlpha) {
-        val (sse, n) = sumSquaredError(spark, coos.head._2, rd.relations.head, factors, k)
+        val pred = predictor(spark, rd.relations.head, factors, k)
+        val (sse, n) = coos.head._2.select(col("ids"), col("v")).as[(Seq[Long], Double)]
+          .map { case (ids, v) => val e = v - pred(ids); (e * e, 1L) }
+          .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
         val rng = new RngStream(opts.seed, 1000L + iter)
         alpha = rng.nextGamma(1.0 + n / 2.0) / (1.0 + sse / 2.0)
       }
@@ -400,70 +349,29 @@ object Gibbs {
       // -- (e) post burn-in: fold prediction into the running mean
       //       (and sum of squares, for the posterior predictive std) --
       if (iter >= opts.burnin) {
-        // carry v and materialize ONCE: both consumers (the predSum
-        // fold and the per-sample RMSE) read the same cached blocks
-        // instead of re-running the prediction map per action
-        val p = predictOnce(spark, testCoo, rd.relations.head, factors, k)
+        // carry v and materialize ONCE: every Posterior consumer reads
+        // the same checkpointed blocks instead of re-running the
+        // prediction map per action; they are ContextCleaner-reclaimed
+        // once unreferenced — no manual unpersist (the first fold's
+        // persist() is lazy and still reads them)
+        val pred = predictor(spark, rd.relations.head, factors, k)
+        posterior.add(testCoo.select(col("row_id"), col("ids")).as[(Long, Seq[Long])]
+          .map { case (rowId, ids) => (rowId, pred(ids)) }.toDF("row_id", "pred")
           .join(testCoo.select(col("row_id"), col("v")), "row_id")
-          .localCheckpoint(true)
-        predSum = predSum match {
-          case None => Some(p
-            .select(col("row_id"), col("pred").as("pred_sum"),
-                    (col("pred") * col("pred")).as("pred_sq_sum"))
-            .persist())
-          case Some(acc) =>
-            // localCheckpoint truncates the lineage (SURVEY.md §7.4.5) —
-            // plain persist would keep a plan tree growing one join per
-            // posterior sample
-            val next = acc.join(p, "row_id")
-              .select(col("row_id"),
-                      (col("pred_sum") + col("pred")).as("pred_sum"),
-                      (col("pred_sq_sum") + col("pred") * col("pred"))
-                        .as("pred_sq_sum"))
-              .localCheckpoint(true)
-            acc.unpersist()
-            Some(next)
-        }
-        nSamples += 1
-        val sIdx = iter - opts.burnin
-        if (retainSample(sIdx, opts.samples, opts.keepSamples))
-          keptSamples += p
-            .select(col("row_id"), lit(sIdx).as("sample_idx"), col("pred"))
-            .localCheckpoint(true)
-        val cur = currentPrediction(spark, testCoo, rd.relations.head, predSum.get, nSamples, opts)
-        val rmse = math.sqrt(cur.select(avg(pow(col("pred") - col("v"), 2))).head().getDouble(0))
-        rmseHist += rmse
-        // the SAMPLE's own RMSE (stationary trace for Diagnostics.rHat)
-        sampleRmseHist += math.sqrt(
-          p.select(avg(pow(col("pred") - col("v"), 2))).head().getDouble(0))
-        // p's checkpoint blocks are ContextCleaner-reclaimed once p
-        // drops out of scope — no manual unpersist (the case-None
-        // predSum persist() is lazy and still reads them)
+          .localCheckpoint(true), iter - opts.burnin)
       }
     }
 
-    val preds = currentPrediction(spark, testCoo, rd.relations.head, predSum.get, nSamples, opts)
-    val factorDfs = entNames.map { e =>
-      val m = factors(e)
-      val rows = (0 until sizes(e)).map(i =>
-        (i.toLong, Array.tabulate(k)(j => m(i, j))))
-      e -> rows.toDF("id", "f")
-    }.toMap
-    Result(preds, rmseHist.toSeq, rmseHist.last, factorDfs, mode = "broadcast",
-      links = betas.map { case (e, b) => e -> toArrays(b) }.toMap,
-      priorMu = lastHyper.map { case (e, nw) => e -> nw.mu.toArray },
-      predMoments = Some(momentsTable(testCoo, predSum.get, nSamples)),
-      linkPrecisions = betas.keys.map(e =>
-        e -> lambdaBetas.getOrElse(e, opts.lambdaBeta)).toMap,
-      sampleRmseHistory = sampleRmseHist.toSeq,
-      samplePreds =
-        if (keptSamples.isEmpty) None
-        else Some(keptSamples.reduce(_ unionByName _)))
+    posterior.result(entNames.map { e =>
+        e -> toArrays(factors(e)).zipWithIndex.map { case (f, i) => (i.toLong, f) }
+          .toSeq.toDF("id", "f")
+      }.toMap, "broadcast", betas.map { case (e, b) => e -> toArrays(b) },
+      lastHyper, lambdaBetas)
   }
 
   // ---------- helpers ----------
 
-  private def toArrays(m: DenseMatrix[Double]): Array[Array[Double]] = {
+  private[bdf] def toArrays(m: DenseMatrix[Double]): Array[Array[Double]] = {
     val out = Array.ofDim[Array[Double]](m.rows)
     var i = 0
     while (i < m.rows) {
@@ -474,36 +382,6 @@ object Gibbs {
       i += 1
     }
     out
-  }
-
-  /** Solve L y = b for lower-triangular L. */
-  private[bdf] def lowerSolve(l: DenseMatrix[Double], b: DenseVector[Double]): DenseVector[Double] = {
-    val n = b.length
-    val y = DenseVector.zeros[Double](n)
-    var i = 0
-    while (i < n) {
-      var s = b(i)
-      var j = 0
-      while (j < i) { s -= l(i, j) * y(j); j += 1 }
-      y(i) = s / l(i, i)
-      i += 1
-    }
-    y
-  }
-
-  /** Solve L^T x = y for lower-triangular L. */
-  private[bdf] def upperSolveT(l: DenseMatrix[Double], y: DenseVector[Double]): DenseVector[Double] = {
-    val n = y.length
-    val x = DenseVector.zeros[Double](n)
-    var i = n - 1
-    while (i >= 0) {
-      var s = y(i)
-      var j = i + 1
-      while (j < n) { s -= l(j, i) * x(j); j += 1 }
-      x(i) = s / l(i, i)
-      i -= 1
-    }
-    x
   }
 
   /** Conjugate Normal-Wishart posterior draw from factor rows
@@ -691,78 +569,23 @@ object Gibbs {
     }
   }
 
-  private def predictOnce(spark: SparkSession, testCoo: DataFrame, rel: Relation,
-                          factors: scala.collection.mutable.Map[String, DenseMatrix[Double]],
-                          k: Int): DataFrame = {
-    import spark.implicits._
-    val sc = spark.sparkContext
-    val bcs = rel.modeEntities.map(e => sc.broadcast(toArrays(factors(e))))
-    val kk = k
-    testCoo.select(col("row_id"), col("ids")).as[(Long, Seq[Long])]
-      .map { case (rowId, ids) =>
-        var dot = 0.0
-        var j = 0
-        while (j < kk) {
-          var p = 1.0
-          var m = 0
-          while (m < ids.length) { p *= bcs(m).value(ids(m).toInt)(j); m += 1 }
-          dot += p
-          j += 1
-        }
-        (rowId, dot)
-      }.toDF("row_id", "pred")
-  }
-
-  /** The persistable uncertainty state: test cells joined to their
-    * running prediction moments, with the sample count made a column
-    * so the table is self-contained across a save/load hop. Shared by
-    * the broadcast and distributed paths. */
-  private[bdf] def momentsTable(testCoo: DataFrame, predSum: DataFrame,
-                                nSamples: Int): DataFrame =
-    testCoo.select(col("row_id"), col("ids"), col("v"))
-      .join(predSum, "row_id")
-      .select(col("row_id"), col("ids"), col("v"),
-              lit(nSamples).as("n_samples"),
-              col("pred_sum"), col("pred_sq_sum"))
-
-  private def currentPrediction(spark: SparkSession, testCoo: DataFrame, rel: Relation,
-                                predSum: DataFrame, nSamples: Int,
-                                opts: Options): DataFrame = {
-    // posterior predictive std over the kept samples (population form;
-    // clamping applies to the mean only, like the reference)
-    val p = testCoo.join(predSum, "row_id")
-      .withColumn("pred", col("pred_sum") / nSamples)
-      .withColumn("pred_std", sqrt(greatest(lit(0.0),
-        col("pred_sq_sum") / nSamples - pow(col("pred_sum") / nSamples, 2))))
-    opts.clamp match {
-      case Some((lo, hi)) =>
-        p.withColumn("pred", least(greatest(col("pred"), lit(lo)), lit(hi)))
-          .select("row_id", "ids", "v", "pred", "pred_std")
-      case None => p.select("row_id", "ids", "v", "pred", "pred_std")
+  /** Cell prediction sum_k prod_m U_m(ids_m, k) from `rel`'s current
+    * factors, broadcast once — for use inside executor closures. */
+  private def predictor(spark: SparkSession, rel: Relation,
+                        factors: scala.collection.mutable.Map[String, DenseMatrix[Double]],
+                        k: Int): Seq[Long] => Double = {
+    val bcs = rel.modeEntities.map(e => spark.sparkContext.broadcast(toArrays(factors(e))))
+    ids => {
+      var dot = 0.0
+      var j = 0
+      while (j < k) {
+        var p = 1.0
+        var m = 0
+        while (m < ids.length) { p *= bcs(m).value(ids(m).toInt)(j); m += 1 }
+        dot += p
+        j += 1
+      }
+      dot
     }
-  }
-
-  private def sumSquaredError(spark: SparkSession, coo: DataFrame, rel: Relation,
-                              factors: scala.collection.mutable.Map[String, DenseMatrix[Double]],
-                              k: Int): (Double, Long) = {
-    import spark.implicits._
-    val sc = spark.sparkContext
-    val bcs = rel.modeEntities.map(e => sc.broadcast(toArrays(factors(e))))
-    val kk = k
-    val (sse, n) = coo.select(col("ids"), col("v")).as[(Seq[Long], Double)]
-      .map { case (ids, v) =>
-        var dot = 0.0
-        var j = 0
-        while (j < kk) {
-          var p = 1.0
-          var m = 0
-          while (m < ids.length) { p *= bcs(m).value(ids(m).toInt)(j); m += 1 }
-          dot += p
-          j += 1
-        }
-        val e = v - dot
-        (e * e, 1L)
-      }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-    (sse, n)
   }
 }

@@ -15,22 +15,22 @@ import org.apache.spark.sql.functions._
   *    entity ids — the ALS in/out-block exchange expressed as joins,
   *    so AQE picks broadcast automatically while a side still fits and
   *    degrades to sort-merge when it doesn't);
-  *  - draws each entity's K-dim conditional in groupByKey.mapGroups
-  *    exactly as the broadcast path does (counter-based RNG, so the
-  *    per-entity draws are partitioning-invariant; the NW sufficient
-  *    statistics and CG matvecs sum doubles via [[DetSum]] in
-  *    partition-id order, so full runs are bit-stable for a fixed
-  *    partitioning — the sums still reorder if the partitioning
-  *    itself changes);
+  *  - carries each cell's link shift beta^T x_i (Macau §3.2) on its
+  *    row, so the draw reads it from the first row of the group;
   *  - aggregates the Normal-Wishart sufficient statistics
-  *    (n, sum u, sum u u^T) with one treeAggregate pass instead of
-  *    iterating driver-side rows;
+  *    (n, sum u, sum u u^T) in one pass instead of iterating
+  *    driver-side rows, and solves the side-information link with the
+  *    distributed CG so X never leaves the cluster;
   *  - localCheckpoints the new factor tables each sweep to truncate
   *    lineage.
   *
-  * Sampling math is identical to [[Gibbs]] (BPMF ICML'08 §3.1;
-  * Macau arXiv:1509.04610 §2.3-2.4 and the §3.2 side-information link,
-  * solved with the distributed CG so X never leaves the cluster).
+  * The per-entity math — conditional draw, prior draw for unseen
+  * entities, probit latent — is the same [[Conditional]] kernel the
+  * broadcast mode calls, and post-burn-in samples fold through the same
+  * [[Posterior]]. Draws are counter-based, so they are
+  * partitioning-invariant; the NW statistics and CG matvecs sum doubles
+  * via [[DetSum]] in partition-id order, so full runs are bit-stable for
+  * a fixed partitioning (the sums reorder if the partitioning changes).
   */
 object GibbsDistributed {
   import Gibbs.{NW, Options, Result}
@@ -73,28 +73,14 @@ object GibbsDistributed {
           else sd.select(col("id").cast("long").as("id"), col("features"))
         name -> proj.persist()
     }
-    val fDims: Map[String, Int] = sideDFs.map { case (e, sd) =>
-      e -> (if (sideSparse(e)) {
-              val mx = sd.select(max(expr("array_max(indices)"))).head()
-              require(!mx.isNullAt(0),
-                s"sparse side table for entity $e has no nonzero features")
-              mx.getInt(0) + 1
-            } else sd.select(size(col("features"))).head().getInt(0))
-    }
+    // the width job also rejects non-finite features
+    val fDims: Map[String, Int] = sideDFs.map { case (e, _) => e -> rd.entities(e).sideWidth }
     // (id, shift = beta^T x_i), refreshed each sweep
     val linkShift = scala.collection.mutable.Map[String, DataFrame]()
     val betas = scala.collection.mutable.Map[String, DenseMatrix[Double]]()
     val lambdaBetas = scala.collection.mutable.Map[String, Double]()
     var lastHyper: Map[String, Gibbs.NW] = Map.empty
-
-    val rmseHist = scala.collection.mutable.ArrayBuffer[Double]()
-    val sampleRmseHist = scala.collection.mutable.ArrayBuffer[Double]()
-    var predSum: Option[DataFrame] = None
-    var nSamples = 0
-    // thinned per-sample retention (Options.keepSamples), same
-    // discipline as the broadcast mode: checkpoint each retained
-    // 3-col sample, union lazily at the end
-    val keptSamples = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    val posterior = new Posterior(testCoo, opts)
     var alphaCur = opts.alpha
 
     /** z = elementwise product over the given modes' factor rows,
@@ -169,7 +155,7 @@ object GibbsDistributed {
           val lmat = new DenseMatrix[Double](kk, kk, bLamL.value)
           val eps = DenseVector.tabulate(kk)(j =>
             CbRng.gaussian(seed, it, tagL ^ 0x5ea1L, id, j.toLong))
-          val e1 = Gibbs.upperSolveT(lmat, eps) // N(0, Lambda^-1)
+          val e1 = Conditional.upperSolveT(lmat, eps) // N(0, Lambda^-1)
           (id, Array.tabulate(kk)(j => f(j) - bMu.value(j) + e1(j)))
         }.toDF("id", "target")
         val sqLb = math.sqrt(lb)
@@ -179,7 +165,7 @@ object GibbsDistributed {
         while (fi < fD0) {
           val eps = DenseVector.tabulate(kk)(j =>
             CbRng.gaussian(seed, it, tagL ^ 0x0e2eL, fi.toLong, j.toLong))
-          e2(fi, ::) := (Gibbs.upperSolveT(lLam, eps) * sqLb).t
+          e2(fi, ::) := (Conditional.upperSolveT(lLam, eps) * sqLb).t
           fi += 1
         }
         val beta =
@@ -238,20 +224,15 @@ object GibbsDistributed {
                 // truncated-normal draw per cell (counter-RNG, alpha=1)
                 val fSelf = factors(e)
                   .select(col("id").as("sfid"), col("f").as("fself"))
-                val relTag = r.name.hashCode.toLong ^ (m.toLong << 17) ^ 0x9b17L
-                val kk2 = k; val seedL = seed; val itL = iter.toLong
+                val relTag = Conditional.relTag(r.name, m)
+                val seedL = seed; val itL = iter.toLong
                 base.select(col("ids"), col("ids").getItem(m).as("id"),
                             col("z"), col("v"))
                   .join(fSelf, col("id") === col("sfid"))
                   .select("ids", "id", "z", "v", "fself")
                   .as[(Seq[Long], Long, Array[Double], Double, Array[Double])]
                   .map { case (ids, id, z, v, fself) =>
-                    var pred = 0.0
-                    var j = 0
-                    while (j < kk2) { pred += z(j) * fself(j); j += 1 }
-                    val ck = ids.foldLeft(0L)((acc2, i) => acc2 * 1000003L + i)
-                    val u = CbRng.uniform(seedL, itL, relTag, ck)
-                    (id, z, Gibbs.Probit.truncatedNormal(pred, v > 0.5, u), 1.0)
+                    (id, z, Conditional.probitLatent(z, fself, ids, v, seedL, itL, relTag), 1.0)
                   }.toDF("id", "z", "v", "aw")
               }
           }
@@ -271,42 +252,18 @@ object GibbsDistributed {
         val bMu = spark.sparkContext.broadcast(nw.mu.toArray)
         val bLam = spark.sparkContext.broadcast(nw.lambda.toArray)
         val kk = k; val it = iter.toLong
-        val eHash = e.hashCode.toLong
         val drawn = all.as[(Long, Array[Double], Double, Double, Array[Double])]
           .groupByKey(_._1)
-          .mapGroups { (id, rows) =>
-            // accumulate likelihood terms first so the prior mean (which
-            // depends on the row-carried shift) can be applied at the end
-            val sZZ = DenseMatrix.zeros[Double](kk, kk)
-            val sZv = DenseVector.zeros[Double](kk)
-            var shiftArr: Array[Double] = null
-            rows.foreach { case (_, z, v, aw, sh) =>
-              if (shiftArr == null && sh != null) shiftArr = sh
-              var r0 = 0
-              while (r0 < kk) {
-                val zr = z(r0) * aw
-                var c0 = 0
-                while (c0 < kk) { sZZ(r0, c0) += zr * z(c0); c0 += 1 }
-                sZv(r0) += zr * v
-                r0 += 1
-              }
-            }
-            val lam = new DenseMatrix[Double](kk, kk, bLam.value.clone())
-            val mu0 = DenseVector(bMu.value)
-            if (shiftArr != null) { mu0 :+= DenseVector(shiftArr) }
-            val prec = lam + sZZ
-            val rhs = (lam * mu0) + sZv
-            val l = cholesky(prec)
-            val y = Gibbs.lowerSolve(l, rhs)
-            val mean = Gibbs.upperSolveT(l, y)
-            val eps = DenseVector.tabulate(kk)(j =>
-              CbRng.gaussian(seed, it, eHash, id, j.toLong))
-            val u = mean + Gibbs.upperSolveT(l, eps)
-            (id, u.toArray)
+          .mapGroups { (id, rows0) =>
+            // every row of one id carries the same shift
+            val rows = rows0.buffered
+            val mu0 = Conditional.shifted(bMu.value, rows.head._5)
+            (id, Conditional.draw(bLam.value, mu0,
+              rows.map { case (_, z, v, aw, _) => (z, v, aw) }, kk, seed, it, e, id))
           }.toDF("id", "f")
 
         // unobserved entities keep a pure prior draw (distributed anti-join)
-        val lamArr = nw.lambda.toArray
+        val lChol = Conditional.priorFactor(nw.lambda, e, it)
         val muArr = nw.mu.toArray
         val unseen = factors(e).select("id")
           .join(drawn.select(col("id").as("did")), col("id") === col("did"), "left_anti")
@@ -318,13 +275,7 @@ object GibbsDistributed {
           case None => unseen.withColumn("shift", lit(null).cast("array<double>"))
         }
         val prior = unseenWithShift.as[(Long, Array[Double])].map { case (id, sh) =>
-          val lChol = cholesky(new DenseMatrix[Double](kk, kk, lamArr.clone()))
-          val eps = DenseVector.tabulate(kk)(j =>
-            CbRng.gaussian(seed, it, eHash + 7L, id, j.toLong))
-          val mu0 = DenseVector(muArr.clone())
-          if (sh != null) { mu0 :+= DenseVector(sh) }
-          val u = mu0 + Gibbs.upperSolveT(lChol, eps)
-          (id, u.toArray)
+          (id, Conditional.prior(lChol, Conditional.shifted(muArr, sh), kk, seed, it, e, id))
         }.toDF("id", "f")
 
         val next = drawn.unionByName(prior).localCheckpoint(true)
@@ -352,70 +303,15 @@ object GibbsDistributed {
       // -- (e) post burn-in: fold prediction into the running mean --
       if (iter >= opts.burnin) {
         val rel = rd.relations.head
-        // carry v and materialize ONCE: the predSum fold and the
-        // per-sample RMSE both read the same cached blocks
-        val p = withZ(testCoo.select(col("row_id"), col("ids"), col("v")), rel,
+        posterior.add(withZ(testCoo.select(col("row_id"), col("ids"), col("v")), rel,
             rel.modeEntities.indices)
           .select(col("row_id"), col("v"),
                   expr("aggregate(z, 0D, (acc, x) -> acc + x)").as("pred"))
-          .localCheckpoint(true)
-        predSum = predSum match {
-          case None => Some(p
-            .select(col("row_id"), col("pred").as("pred_sum"),
-                    (col("pred") * col("pred")).as("pred_sq_sum"))
-            .localCheckpoint(true))
-          case Some(acc) =>
-            val next = acc.join(p, "row_id")
-              .select(col("row_id"),
-                      (col("pred_sum") + col("pred")).as("pred_sum"),
-                      (col("pred_sq_sum") + col("pred") * col("pred"))
-                        .as("pred_sq_sum"))
-              .localCheckpoint(true)
-            acc.unpersist()
-            Some(next)
-        }
-        nSamples += 1
-        val sIdx = iter - opts.burnin
-        if (Gibbs.retainSample(sIdx, opts.samples, opts.keepSamples))
-          keptSamples += p
-            .select(col("row_id"), lit(sIdx).as("sample_idx"), col("pred"))
-            .localCheckpoint(true)
-        val cur = currentPrediction(testCoo, predSum.get, nSamples, opts)
-        val rmse = math.sqrt(cur.select(avg(pow(col("pred") - col("v"), 2))).head().getDouble(0))
-        rmseHist += rmse
-        // the SAMPLE's own RMSE (stationary trace for Diagnostics.rHat)
-        sampleRmseHist += math.sqrt(
-          p.select(avg(pow(col("pred") - col("v"), 2))).head().getDouble(0))
+          .localCheckpoint(true), iter - opts.burnin)
       }
     }
 
-    val preds = currentPrediction(testCoo, predSum.get, nSamples, opts)
-    Result(preds, rmseHist.toSeq, rmseHist.last, factors.toMap,
-      mode = "distributed",
-      predMoments = Some(Gibbs.momentsTable(testCoo, predSum.get, nSamples)),
-      links = betas.map { case (e, b) =>
-        e -> Array.tabulate(b.rows)(i => Array.tabulate(b.cols)(j => b(i, j)))
-      }.toMap,
-      priorMu = lastHyper.map { case (e, nw) => e -> nw.mu.toArray },
-      linkPrecisions = betas.keys.map(e =>
-        e -> lambdaBetas.getOrElse(e, opts.lambdaBeta)).toMap,
-      sampleRmseHistory = sampleRmseHist.toSeq,
-      samplePreds =
-        if (keptSamples.isEmpty) None
-        else Some(keptSamples.reduce(_ unionByName _)))
-  }
-
-  private def currentPrediction(testCoo: DataFrame, predSum: DataFrame,
-                                nSamples: Int, opts: Options): DataFrame = {
-    val p = testCoo.join(predSum, "row_id")
-      .withColumn("pred", col("pred_sum") / nSamples)
-      .withColumn("pred_std", sqrt(greatest(lit(0.0),
-        col("pred_sq_sum") / nSamples - pow(col("pred_sum") / nSamples, 2))))
-    opts.clamp match {
-      case Some((lo, hi)) =>
-        p.withColumn("pred", least(greatest(col("pred"), lit(lo)), lit(hi)))
-          .select("row_id", "ids", "v", "pred", "pred_std")
-      case None => p.select("row_id", "ids", "v", "pred", "pred_std")
-    }
+    posterior.result(factors.toMap, "distributed",
+      betas.map { case (e, b) => e -> Gibbs.toArrays(b) }, lastHyper, lambdaBetas)
   }
 }

@@ -1,6 +1,6 @@
 package graft.bdf
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Data model for the Bayesian-factorization engine — the Spark-native
@@ -18,8 +18,32 @@ import org.apache.spark.sql.functions._
 final case class Entity(
     name: String,
     numItems: Int,
-    /** Optional side info: (id: Long, features: Array[Double]). */
-    side: Option[DataFrame] = None)
+    /** Optional side info: dense (id: Long, features: Array[Double]) or
+      * sparse CSR (id: Long, indices: Array[Int], values: Array[Double]). */
+    side: Option[DataFrame] = None) {
+
+  /** Feature width F of the side table — max(indices)+1 for sparse
+    * rows, size(features) for dense ones, 0 without side info — in one
+    * aggregate query that also rejects a non-finite feature. */
+  def sideWidth: Int = side.fold(0) { df =>
+    val sparse = df.columns.contains("indices")
+    val xs = if (sparse) "values" else "features"
+    val width =
+      if (sparse) max(array_max(col("indices"))) + 1 else max(size(col(xs)))
+    // Spark orders NaN above +Inf: one comparison rejects NaN, ±Inf and null
+    val finite = forall(col(xs), x => coalesce(abs(x) < Double.PositiveInfinity, lit(false)))
+    val row = df.agg(width,
+      first(when(!finite, struct(col("id"), col(xs))), ignoreNulls = true)).head()
+    if (!row.isNullAt(1)) {
+      val bad = row.getStruct(1)
+      throw new IllegalArgumentException(s"entity $name side table: non-finite value in " +
+        s"column $xs at row (id=${bad.get(0)}, $xs=${bad.getSeq(1).mkString("[", ",", "]")})")
+    }
+    require(!row.isNullAt(0), s"side table for entity $name " +
+      (if (sparse) "has no nonzero features" else "is empty"))
+    row.getInt(0)
+  }
+}
 
 final case class Relation(
     name: String,
@@ -49,6 +73,44 @@ final case class RelationData(
   require(relations.nonEmpty)
   relations.foreach(r => r.modeEntities.foreach(e =>
     require(entities.contains(e), s"unknown entity $e")))
+
+  /** Reject cells the sampler cannot use — a null, a mode id outside
+    * [0, numItems), a non-finite value — or an empty relation, naming
+    * the relation, the column and one offending row. One Spark job per
+    * relation. */
+  def validate(): Unit = relations.foreach { r =>
+    val cols = r.modeCols :+ r.valueCol
+    val sizes = r.modeEntities.map(entities(_).numItems.toLong).toArray
+    // per partition: the cell count and the first bad row of each column
+    val parts = r.df
+      .select(r.modeCols.map(col(_).cast("long")) :+ col(r.valueCol).cast("double"): _*)
+      .rdd.mapPartitions { it =>
+        val bad = new Array[Row](sizes.length + 1)
+        var n = 0L
+        it.foreach { row =>
+          n += 1
+          var c = 0
+          while (c < bad.length) {
+            if (bad(c) == null && (row.isNullAt(c) ||
+                (if (c < sizes.length) row.getLong(c) < 0 || row.getLong(c) >= sizes(c)
+                 else !java.lang.Double.isFinite(row.getDouble(c)))))
+              bad(c) = row
+            c += 1
+          }
+        }
+        Iterator((n, bad))
+      }.collect()
+    require(parts.map(_._1).sum > 0, s"relation ${r.name} is empty")
+    cols.indices.foreach { c =>
+      parts.map(_._2(c)).find(_ != null).foreach { row =>
+        val what =
+          if (c < sizes.length) s"id outside [0, ${sizes(c)}) of entity ${r.modeEntities(c)}"
+          else "non-finite value"
+        throw new IllegalArgumentException(s"relation ${r.name}: $what in column ${cols(c)} " +
+          s"at row ${cols.zip(row.toSeq).map { case (k, v) => s"$k=$v" }.mkString("(", ", ", ")")}")
+      }
+    }
+  }
 }
 
 object RelationData {

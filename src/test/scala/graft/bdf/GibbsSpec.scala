@@ -228,6 +228,48 @@ class GibbsSpec extends SparkSpec {
       s"distributed side-info rmse ${res.finalRmse} not < sd $sd")
   }
 
+  /** A planted Macau problem in the benchmark's shape: row factors are a
+    * linear function of dense gaussian row features plus noise, column
+    * factors are gaussian, each row observes `perRow` columns and ~20%
+    * of cells are held out. Returns (train, test, stddev of test v). */
+  private def linkedMacau(seed: Long): (RelationData, org.apache.spark.sql.DataFrame, Double) = {
+    val s = spark
+    import s.implicits._
+    val rows = 150; val cols = 30; val perRow = 12; val nf = 5; val kt = 3
+    val rng = new scala.util.Random(seed)
+    val beta = Array.fill(nf, kt)(rng.nextGaussian() / math.sqrt(nf))
+    val x = Array.fill(rows, nf)(rng.nextGaussian())
+    val u = Array.tabulate(rows, kt)((i, k) =>
+      (0 until nf).map(f => x(i)(f) * beta(f)(k)).sum + 0.3 * rng.nextGaussian())
+    val v = Array.fill(cols, kt)(rng.nextGaussian())
+    val cells = for (i <- 0 until rows; j <- rng.shuffle((0 until cols).toList).take(perRow))
+      yield (i.toLong, j.toLong,
+        (0 until kt).map(k => u(i)(k) * v(j)(k)).sum + 0.5 * rng.nextGaussian(),
+        rng.nextDouble() < 0.2)
+    val test = cells.filter(_._4)
+      .map { case (i, j, y, _) => (i * cols + j, Seq(i, j), y) }.toDF("row_id", "ids", "v")
+    val side = x.zipWithIndex.map { case (f, i) => (i.toLong, f) }.toSeq.toDF("id", "features")
+    val rd = RelationData(
+      Map("row" -> Entity("row", rows, Some(side)), "col" -> Entity("col", cols)),
+      Seq(Relation("r0", cells.filterNot(_._4).map(c => (c._1, c._2, c._3)).toDF("row", "col", "v"),
+        Seq("row", "col"), Seq("row", "col"), "v")))
+    (rd, test, test.select(stddev_pop($"v")).head().getDouble(0))
+  }
+
+  test("distributed mode with dense linked side info agrees with broadcast mode") {
+    val (rd, test, sd) = linkedMacau(42L)
+    val opts = Gibbs.Options(numLatent = 4, burnin = 3, samples = 3, seed = 42L)
+    val b = Gibbs.train(spark, rd, test, opts.copy(distributedFactors = Some(false)))
+    val d1 = Gibbs.train(spark, rd, test, opts.copy(distributedFactors = Some(true)))
+    val d2 = Gibbs.train(spark, rd, test, opts.copy(distributedFactors = Some(true)))
+    assert(b.mode == "broadcast" && d1.mode == "distributed")
+    assert(d1.finalRmse < sd, s"distributed rmse ${d1.finalRmse} not < sd $sd")
+    assert(math.abs(d1.finalRmse - b.finalRmse) <= 0.2 * b.finalRmse,
+      s"distributed rmse ${d1.finalRmse} vs broadcast ${b.finalRmse}")
+    // every draw reads the shared prior mean; none may write to it
+    assert(d1.rmseHistory === d2.rmseHistory)
+  }
+
   test("distributed-factors mode with SPARSE side info (CSR one-hot rows)") {
     val s = spark
     import s.implicits._
@@ -445,7 +487,7 @@ class GibbsSpec extends SparkSpec {
     // pure selector arithmetic (no Spark): 2 of 6 -> indices 2 and 5;
     // keep >= total -> all; keep = 0 -> none
     def retained(total: Int, keep: Int): Seq[Int] =
-      (0 until total).filter(Gibbs.retainSample(_, total, keep))
+      (0 until total).filter(Posterior.retainSample(_, total, keep))
     assert(retained(6, 2) === Seq(2, 5))
     assert(retained(5, 5) === Seq(0, 1, 2, 3, 4))
     assert(retained(3, 7) === Seq(0, 1, 2))
