@@ -1,15 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import Harness.{jstr, loadavg}
 object Bench {
-  /** 1/5/15-minute system load from /proc/loadavg — emitted at both
-    * ends of the run so a bench delta is attributable to host load
-    * IN-ARTIFACT (the round-6 -> 7 "regression" hunt burned a round
-    * proving unchanged code got slower under a loaded host). */
-  private def loadavg(): Seq[Double] =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString
-      .trim.split(" ").take(3).toSeq.map(_.toDouble)
-    catch { case _: Throwable => Nil }
-
   /** Single-thread CPU-speed canary: wall seconds for a fixed 2e8-step
     * xorshift64 loop, best of 3 (JIT-warmed). Absolute query times are
     * only comparable ACROSS rounds if the host runs at the same speed —
@@ -73,13 +64,13 @@ object Bench {
     * on the physical host was eating PARALLEL memory bandwidth, which
     * no single-thread probe can see. Divide cross-round totals by the
     * ratio of THIS number before reading anything into them. */
-  /** Thread count for [[membwParCanary]] — sized to the host (round-16
-    * advice item: a hardcoded 32 on a smaller host measures scheduler
-    * contention, not parallel bandwidth) and recorded in the emitted
+  /** Thread count for [[membwParCanary]] — the session's core count,
+    * [[Harness.cpus]] (round-16 advice item: a hardcoded 32 on a
+    * smaller host measures scheduler contention, not parallel
+    * bandwidth) — and recorded in the emitted
     * JSON so cross-round canary ratios are only compared like-for-like. */
   private[graft] val membwParThreads: Int =
-    sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
-      .getOrElse(Runtime.getRuntime.availableProcessors)
+    Harness.cpus.toIntOption.getOrElse(Runtime.getRuntime.availableProcessors)
 
   private[graft] def membwParCanary(): Double = {
     def once(): Double = {
@@ -105,30 +96,13 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS) — Spark 4 only reads it
-      // as a long (see graft.Tables.events normalization).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same config-time extension injection as production / Verify
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
     val loadStart = loadavg()
     val canaryStart = cpuCanary()
     val membwStart = membwCanary()
     val membwParStart = membwParCanary()
-    // warm the JVM / codegen / parquet reader on EVERY table so the
-    // first timed query touching each file isn't charged the one-time
-    // footer-read/codegen startup cost
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings")
-      .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
+    Harness.warm(spark, sfDir)
     // median-of-3 per query: single-shot times at sf0.1 bounce with
     // host load (round-1 bench showed 10x swings on unchanged queries),
     // so report the per-query median to make round-over-round deltas
@@ -160,22 +134,7 @@ object Bench {
                 false
             }
           val dt = (System.nanoTime() - t0) / 1e9
-          // untimed: drop this rep's localCheckpoint RDD blocks so the
-          // 191-query session doesn't accumulate cached loop state —
-          // round-12's q_graph_pagerank benched 4.75 s in-session vs
-          // 1.6-1.8 s solo (BenchOne) purely from that pressure. No
-          // query reuses cached RDDs across calls (artifacts are
-          // on-disk, content-keyed).
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
-          // ...and sweep the session's plan cache too (round-15 judge
-          // item): any Dataset.persist/table cache a query leaves
-          // behind competes for executor memory with every LATER
-          // query, making in-bench medians depend on registry
-          // position; no contract query reuses a cross-call cache
-          // (artifacts are on-disk, content-keyed), so the sweep can
-          // never slow a correct query, only de-noise its neighbors
-          spark.sharedState.cacheManager.clearCache()
+          Harness.sweep(spark)
           (dt, ok)
         }
         repTimes(name) = timed.map(_._1)
@@ -188,12 +147,6 @@ object Bench {
     val canaryEnd = cpuCanary()
     val membwEnd = membwCanary()
     val membwParEnd = membwParCanary()
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     def jarr(xs: Seq[Double]): String = xs.mkString("[", ",", "]")
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")

@@ -45,7 +45,7 @@ object Lineage {
     * but AQE is ALSO what rescues the JOIN-carrying loops (it
     * converts their SMJ-against-unknown-stats loop state to runtime
     * broadcasts and coalesces the tiny state exchanges). Round-19
-    * measured the trade on every loop face (JobsProbe, sf0.1,
+    * measured the trade on every loop face (jobs per serve, sf0.1,
     * local[32]): with AQE off the graph loops got 1.4-1.9x SLOWER
     * despite ~4x fewer jobs (communities_converged 4.8 s/86 jobs →
     * 8.5 s/19 jobs; pagerank_converged 5.2/45 → 7.8/11), while the
@@ -60,10 +60,11 @@ object Lineage {
     * which executes after restore — keeps the session's AQE setting.
     *
     * Thread-safety: session-conf mutation is visible session-wide;
-    * the Bench/Verify/BenchOne drivers construct queries one at a
-    * time on one thread (the documented single-threaded driver
-    * contract). Concurrent query construction on one session should
-    * synchronize externally or use separate sessions. */
+    * every main (Bench, BenchOne, Verify, PlanDump — all on the one
+    * [[Harness]] session) constructs queries one at a time on one
+    * thread (the documented single-threaded contract).
+    * Concurrent query construction on one session should synchronize
+    * externally or use separate sessions. */
   def withAqeOff[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
     val key = "spark.sql.adaptive.enabled"
     val prev = s.conf.get(key)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-capture tool for the optimization rounds: writes the
   * `.explain("formatted")` output of named registry queries to files
   * (`plans/<tag>/<query>_<suffix>.txt`) so before/after plan-shape
@@ -9,8 +7,11 @@ import org.apache.spark.sql.SparkSession
   *
   *   sbt> runMain graft.PlanDump plans/r18 before q_graph_link_predict ...
   *
-  * Same session config as [[Bench]] (env: SPARK_GRAFT_SF_DIR,
-  * SPARK_GRAFT_CPUS). Queries whose construction runs eager jobs
+  * Same session as [[Bench]] (env: SPARK_GRAFT_SF_DIR,
+  * SPARK_GRAFT_CPUS; plans/r18 and plans/r19 were dumped at
+  * SPARK_GRAFT_CPUS=32). Every name is checked before the session
+  * starts; an unknown one exits with code 2.
+  * Queries whose construction runs eager jobs
   * (localCheckpoint loops) dump the FINAL plan — the loop bodies are
   * documented in the per-face scaladoc instead. Not part of the
   * driver contract. */
@@ -21,22 +22,11 @@ object PlanDump {
     val names =
       if (args.length > 2) args.drop(2).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val queries = Harness.resolve(names).fold(Harness.usage, identity)
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    for (n <- names) {
-      val fn = SparkEntry.queries.getOrElse(n, {
-        System.err.println(s"unknown query '$n'"); sys.exit(2)
-      })
+    for ((n, fn) <- queries) {
       try {
         val df = fn(spark, sfDir)
         val txt = df.queryExecution.explainString(
@@ -48,11 +38,9 @@ object PlanDump {
         case e: Throwable =>
           System.err.println(s"[plandump] $n failed: ${e.getMessage}")
       }
-      // same inter-query sweep as Bench so checkpoint blocks from one
-      // query's construction don't skew the next dump's session
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.sharedState.cacheManager.clearCache()
+      // checkpoint blocks from one query's construction must not
+      // skew the next dump's session
+      Harness.sweep(spark)
     }
     spark.stop()
   }

@@ -13,7 +13,7 @@ object Tables {
     * generations; normalize both to a microsecond TimestampType column:
     *  - TIMESTAMP(NANOS): Spark 4 refuses to map it to TimestampType
     *    (PARQUET_TYPE_ILLEGAL); sessions set
-    *    spark.sql.legacy.parquet.nanosAsLong=true (see Verify/Bench/specs),
+    *    spark.sql.legacy.parquet.nanosAsLong=true (see Harness.session/specs),
     *    so ts arrives as LongType nanoseconds → `ts DIV 1000` (floor,
     *    identical to DuckDB's ns->us truncation post-1970).
     *  - timestamp[us] without timezone: Spark reads TIMESTAMP_NTZ, which
@@ -40,6 +40,11 @@ object Tables {
             .cast(org.apache.spark.sql.types.TimestampType))
       case _ => df
     }
+
+  /** The table each loader below reads — [[Harness.warm]]'s list;
+    * HarnessSpec checks the two stay equal. */
+  val names: Seq[String] = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

@@ -1,7 +1,7 @@
 package graft.bdf
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Harness
 
 /** Usage example / smoke driver for the factorization engine: factorize
   * the lineitem (partkey x suppkey -> quantity) COO matrix, the exact
@@ -25,13 +25,8 @@ object Demo {
     // cells-grow-10x sampler probe (round-15 verdict item: measure
     // the per-sweep cost exponent at the clone, not argue it)
     val orderMode = args.drop(1).contains("order")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(
+      sys.env.getOrElse("SPARK_MASTER", s"local[${Harness.cpus}]"))
 
     // dense-ish COO: re-key entity ids into contiguous 0-based domains
     val rowCol = if (orderMode) "l_orderkey" else "l_partkey"

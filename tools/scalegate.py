@@ -2,7 +2,7 @@
 """Recorded 100x scale gate (round-15 verdict item: promote the 100x
 probes from ad-hoc triage to a per-round artifact).
 
-Runs graft.ScaleProbe over the DATA-PROPORTIONAL faces — the bench
+Runs graft.BenchOne over the DATA-PROPORTIONAL faces — the bench
 head plus every banded/recount family whose cost is claimed
 flat-or-linear — on the 10x and 100x corpus clones, computes each
 query's 10->100x scaling exponent log(t100/t10)/log(10) from the
@@ -73,7 +73,7 @@ DEFAULT_QUERIES = [
 
 def run_probe(reps, queries, dirs):
     cmd = ['sbt', '-batch',
-           f"runMain graft.ScaleProbe {reps} {','.join(queries)} "
+           f"runMain graft.BenchOne {','.join(queries)} {reps} "
            + ' '.join(dirs)]
     env = dict(os.environ, SPARK_GRAFT_CPUS=os.environ.get(
         'SPARK_GRAFT_CPUS', '32'))
@@ -83,7 +83,7 @@ def run_probe(reps, queries, dirs):
              if l.startswith('{"query":')]
     if p.returncode != 0 and not lines:
         sys.stderr.write(p.stdout[-4000:] + p.stderr[-2000:])
-        sys.exit(f'ScaleProbe failed (rc={p.returncode})')
+        sys.exit(f'BenchOne failed (rc={p.returncode})')
     return [json.loads(l) for l in lines]
 
 
