@@ -1,7 +1,8 @@
 package graft.bdf
 
 import breeze.linalg.{cholesky, DenseMatrix, DenseVector}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Blocked Gibbs sampler for Bayesian matrix/tensor factorization with
@@ -13,18 +14,24 @@ import org.apache.spark.sql.functions._
   * [[train]] validates its input, then runs one of two execution modes
   * that differ only in how an entity's observed cells meet the
   * opposite-mode factors and where the factors live:
-  *  - broadcast (this object): observations stay distributed in
-  *    persisted COO DataFrames; each sweep ships the (small) factor
-  *    matrices from the driver to executors as broadcasts — the Spark
-  *    analog of the reference's SharedArray zero-copy factors — and
-  *    groups every entity's cells by id (the IndexedDF inverted index);
+  *  - broadcast (this object): at entry, each entity type's cells are
+  *    indexed once into persisted per-partition CSR blocks
+  *    ([[CellIndex]], the IndexedDF analog; its one shuffle runs in the
+  *    first sweep). Each sweep ships the (small) factor matrices from
+  *    the driver to executors as broadcasts — the Spark analog of the
+  *    reference's SharedArray zero-copy factors — and draws each entity
+  *    type in one narrow job over its index, shuffling nothing;
   *  - distributed ([[GibbsDistributed]]): factor tables stay DataFrames
   *    and reach the cells through joins.
   * Both modes hand each entity's (z, v, aw) rows to the one kernel in
   * [[Conditional]] (conditional draw, prior draw, probit latent) and
   * fold post-burn-in samples through one [[Posterior]]. Every draw is a
-  * counter-based pure function of (seed, iter, entity, id), so results
-  * do not depend on partitioning.
+  * counter-based pure function of (seed, iter, entity, id). In broadcast
+  * mode each id's cells also reach the kernel in one fixed order, so
+  * without sampleAlpha the factors and per-cell predictions do not
+  * depend on partitioning; the RMSE traces (and alpha's SSE) are
+  * partition sums folded in partition order, reproducible for a fixed
+  * partitioning.
   */
 object Gibbs {
   import Conditional.{lowerSolve, upperSolveT}
@@ -159,11 +166,11 @@ object Gibbs {
     val entNames = rd.entities.keys.toSeq.sorted
     val sizes = entNames.map(e => e -> rd.entities(e).numItems).toMap
 
-    // --- persisted COO per relation (the IndexedDF analog: shuffled
-    // once per grouping key, reused every sweep) ---
-    val coos: Seq[(Relation, DataFrame)] = rd.relations.map { r =>
-      r -> r.coo.persist()
-    }
+    // --- the cell index per entity type (the IndexedDF analog): one
+    // shuffle at the first sweep, then read in place by every draw ---
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val index: Map[String, RDD[CellIndex]] =
+      entNames.map(e => e -> CellIndex.build(rd, e, parts)).toMap
     val testCoo = test.persist()
 
     // --- mutable driver state: factor matrices (rows = items) ---
@@ -252,71 +259,69 @@ object Gibbs {
         linkMeans(e) = lm
       }
 
-      // -- (c) per-entity conditional draws, one mode at a time,
-      //        distributed over the observations --
+      // -- (c) per-entity conditional draws: one narrow job per entity
+      //        type over its cell index, against broadcast factors --
       for (e <- entNames) {
-        // contributions (z, v) from every relation/mode this entity joins
-        val sweepBcs = scala.collection.mutable.ArrayBuffer
-          .empty[org.apache.spark.broadcast.Broadcast[_]]
-        val contribs: Seq[DataFrame] = coos.flatMap { case (r, coo) =>
-          r.modeEntities.zipWithIndex.collect {
-            case (ent, m) if ent == e =>
-              val otherFactors = r.modeEntities.zipWithIndex
-                .filter(_._2 != m)
-                .map { case (oe, om) => (om, sc.broadcast(toArrays(factors(oe)))) }
-              sweepBcs ++= otherFactors.map(_._2)
-              val kk = k
-              // each relation may carry its own noise precision
-              // (Macau §2.3); default = the global (possibly sampled)
-              // alpha — except probit, whose latent likelihood is unit
-              // variance
-              val probit = opts.binaryProbit
-              val aRel = if (probit) 1.0 else r.alpha.getOrElse(alpha)
-              val bSelf = if (probit) sc.broadcast(toArrays(factors(e))) else null
-              if (bSelf != null) sweepBcs += bSelf
-              val seedL = opts.seed; val itL = iter.toLong
-              val relTag = Conditional.relTag(r.name, m)
-              coo.select(col("ids"), col("v")).as[(Seq[Long], Double)]
-                .map { case (ids, v) =>
-                  // z = elementwise product of the other modes' latents
-                  // (Macau §2.4 tensor rule; arity-2 reduces to BPMF)
-                  val z = Array.fill(kk)(1.0)
-                  otherFactors.foreach { case (om, bf) =>
-                    val f = bf.value(ids(om).toInt)
-                    var j = 0
-                    while (j < kk) { z(j) *= f(j); j += 1 }
-                  }
-                  // Albert-Chib: replace the 0/1 label by a truncated-
-                  // normal latent around the CURRENT prediction
-                  val vv = if (!probit) v else Conditional.probitLatent(
-                    z, bSelf.value(ids(m).toInt), ids, v, seedL, itL, relTag)
-                  (ids(m), z, vv, aRel)
-                }.toDF("id", "z", "v", "aw")
-          }
-        }
-        val all = contribs.reduce(_ unionByName _)
-
         val nw = hyper(e)
+        val link = linkMeans.get(e).map(toArrays)
+        val kk = k; val seed = opts.seed; val it = iter.toLong
+        // per block (relation, mode): the other modes' factors, the
+        // cell noise precision (Macau §2.3: per relation, else the
+        // global, possibly sampled, alpha; probit's latent likelihood
+        // is unit variance) and the probit cell key's relation tag
+        val roles = CellIndex.roles(rd, e)
+        val others = roles.map { case (r, m) => r.modeEntities.patch(m, Nil, 1) }
+        val bcs = (others.flatten ++ (if (opts.binaryProbit) Seq(e) else Nil)).distinct
+          .map(n => n -> sc.broadcast(toArrays(factors(n)))).toMap
+        val perRole = roles.zip(others).map { case ((r, m), os) =>
+          (os.map(bcs).toArray, m, r.modeEntities.length,
+           if (opts.binaryProbit) 1.0 else r.alpha.getOrElse(alpha),
+           Conditional.relTag(r.name, m))
+        }.toArray
+        val bSelf = if (opts.binaryProbit) bcs(e) else null
         val bMu = sc.broadcast(nw.mu.toArray)
         val bLam = sc.broadcast(nw.lambda.toArray) // column-major k*k
-        val link = linkMeans.get(e).map(toArrays)
         val bLink = sc.broadcast(link.orNull)
-        val kk = k; val seed = opts.seed; val it = iter.toLong
-
-        val drawn = all.as[(Long, Array[Double], Double, Double)]
-          .groupByKey(_._1)
-          .mapGroups { (id, rows) =>
+        val drawn = index(e).mapPartitions(_.flatMap { part =>
+          val fs = perRole.map(_._1.map(_.value))
+          Iterator.tabulate(part.ids.length) { i =>
+            val id = part.ids(i)
+            val rows = part.blocks.indices.iterator.flatMap { b =>
+              val blk = part.blocks(b)
+              val (_, m, arity, aw, relTag) = perRole(b)
+              Iterator.range(blk.offsets(i), blk.offsets(i + 1)).map { c =>
+                // z = elementwise product of the other modes' latents
+                // (Macau §2.4 tensor rule; arity 2 reduces to BPMF)
+                val z = Array.fill(kk)(1.0)
+                var o = 0
+                while (o < fs(b).length) {
+                  val f = fs(b)(o)(blk.others(o)(c))
+                  var j = 0
+                  while (j < kk) { z(j) *= f(j); j += 1 }
+                  o += 1
+                }
+                val v = blk.values(c)
+                // Albert-Chib: replace the 0/1 label by a truncated-
+                // normal latent around the CURRENT prediction
+                val vv = if (bSelf == null) v else {
+                  val ids = Array.tabulate(arity)(q =>
+                    if (q == m) id else blk.others(if (q < m) q else q - 1)(c).toLong)
+                  Conditional.probitLatent(z, bSelf.value(id.toInt), ids.toSeq, v,
+                    seed, it, relTag)
+                }
+                (z, vv, aw)
+              }
+            }
             val mu0 = Conditional.shifted(bMu.value,
               if (bLink.value == null) null else bLink.value(id.toInt))
-            (id, Conditional.draw(bLam.value, mu0,
-              rows.map { case (_, z, v, aw) => (z, v, aw) }, kk, seed, it, e, id))
-          }.collect()
-        // the per-sweep broadcasts (other-mode factors, probit self
-        // factors, NW state) are dead after the collect — destroy them
-        // instead of waiting on GC-driven cleanup (N x K each, every
-        // sweep, every mode)
+            (id, Conditional.draw(bLam.value, mu0, rows, kk, seed, it, e, id))
+          }
+        }).collect()
+        // the per-sweep broadcasts are dead after the collect — destroy
+        // them instead of waiting on GC-driven cleanup (N x K each,
+        // every sweep, every mode)
         bMu.destroy(); bLam.destroy(); bLink.destroy()
-        sweepBcs.foreach(_.destroy())
+        bcs.values.foreach(_.destroy())
 
         // fold drawn rows into the (driver) factor matrix; entities with
         // no observations keep a pure prior draw
@@ -336,12 +341,29 @@ object Gibbs {
         }
       }
 
-      // -- (d) noise precision draw from residuals (Macau §2.1) --
+      // -- (d) noise precision draw from residuals (Macau §2.1): the
+      //       SSE over relation 0's cells, read from the index of its
+      //       mode-0 entity (whose first block they are), summed per
+      //       partition and folded here in partition order --
       if (opts.sampleAlpha) {
-        val pred = predictor(spark, rd.relations.head, factors, k)
-        val (sse, n) = coos.head._2.select(col("ids"), col("v")).as[(Seq[Long], Double)]
-          .map { case (ids, v) => val e = v - pred(ids); (e * e, 1L) }
-          .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+        val r0 = rd.relations.head
+        val bcs = r0.modeEntities.map(n => sc.broadcast(toArrays(factors(n))))
+        val kk = k
+        val partials = index(r0.modeEntities.head).map { part =>
+          val blk = part.blocks(0)
+          val fs = bcs.map(_.value)
+          var sse = 0.0
+          for (i <- part.ids.indices; c <- blk.offsets(i) until blk.offsets(i + 1)) {
+            val rows = fs.head(part.ids(i).toInt) +:
+              blk.others.indices.map(o => fs(o + 1)(blk.others(o)(c)))
+            val err = blk.values(c) - (0 until kk).map(j => rows.foldLeft(1.0)(_ * _(j))).sum
+            sse += err * err
+          }
+          (sse, blk.values.length.toLong)
+        }.collect()
+        bcs.foreach(_.destroy())
+        val sse = partials.foldLeft(0.0)(_ + _._1)
+        val n = partials.foldLeft(0L)(_ + _._2)
         val rng = new RngStream(opts.seed, 1000L + iter)
         alpha = rng.nextGamma(1.0 + n / 2.0) / (1.0 + sse / 2.0)
       }
@@ -349,19 +371,15 @@ object Gibbs {
       // -- (e) post burn-in: fold prediction into the running mean
       //       (and sum of squares, for the posterior predictive std) --
       if (iter >= opts.burnin) {
-        // carry v and materialize ONCE: every Posterior consumer reads
-        // the same checkpointed blocks instead of re-running the
-        // prediction map per action; they are ContextCleaner-reclaimed
-        // once unreferenced — no manual unpersist (the first fold's
-        // persist() is lazy and still reads them)
         val pred = predictor(spark, rd.relations.head, factors, k)
-        posterior.add(testCoo.select(col("row_id"), col("ids")).as[(Long, Seq[Long])]
-          .map { case (rowId, ids) => (rowId, pred(ids)) }.toDF("row_id", "pred")
-          .join(testCoo.select(col("row_id"), col("v")), "row_id")
-          .localCheckpoint(true), iter - opts.burnin)
+        posterior.add(testCoo.select(col("row_id"), col("ids"), col("v"))
+          .as[(Long, Seq[Long], Double)]
+          .map { case (rowId, ids, v) => (rowId, v, pred(ids)) }.toDF("row_id", "v", "pred"),
+          iter - opts.burnin)
       }
     }
 
+    index.values.foreach(_.unpersist())
     posterior.result(entNames.map { e =>
         e -> toArrays(factors(e)).zipWithIndex.map { case (f, i) => (i.toLong, f) }
           .toSeq.toDF("id", "f")

@@ -306,8 +306,8 @@ object GibbsDistributed {
         posterior.add(withZ(testCoo.select(col("row_id"), col("ids"), col("v")), rel,
             rel.modeEntities.indices)
           .select(col("row_id"), col("v"),
-                  expr("aggregate(z, 0D, (acc, x) -> acc + x)").as("pred"))
-          .localCheckpoint(true), iter - opts.burnin)
+                  expr("aggregate(z, 0D, (acc, x) -> acc + x)").as("pred")),
+          iter - opts.burnin)
       }
     }
 

@@ -591,4 +591,120 @@ class GibbsSpec extends SparkSpec {
     assert(rmse < 0.6 * sd2,
       s"cold-start rmse $rmse not < 0.6 * baseline $sd2")
   }
+
+  private def bits(xs: Seq[Double]): Seq[Long] = xs.map(java.lang.Double.doubleToLongBits)
+
+  /** Every factor row of a result, as bits, in id order. */
+  private def factorBits(r: Gibbs.Result): Map[String, Seq[(Long, Seq[Long])]] =
+    r.factors.map { case (e, df) =>
+      e -> df.collect().map(row => (row.getLong(0), bits(row.getSeq[Double](1))))
+        .sortBy(_._1).toSeq
+    }
+
+  /** Every test cell's (pred, pred_std), as bits. */
+  private def cellBits(r: Gibbs.Result): Map[Long, Seq[Long]] =
+    r.predictions.select("row_id", "pred", "pred_std").collect()
+      .map(row => row.getLong(0) -> bits(Seq(row.getDouble(1), row.getDouble(2)))).toMap
+
+  test("sampled alpha is reproducible bit for bit in broadcast mode") {
+    val s = spark
+    import s.implicits._
+    val df = rank2Matrix(25, 20, seed = 9L).toDF("row", "col", "v")
+    val opts = Gibbs.Options(numLatent = 6, burnin = 3, samples = 3, sampleAlpha = true,
+      alpha = 1.0, seed = 19L, distributedFactors = Some(false))
+    val r1 = Macau.fit(spark, df, Seq("row", "col"), "v", opts)
+    val r2 = Macau.fit(spark, df, Seq("row", "col"), "v", opts)
+    assert(bits(r1.rmseHistory) === bits(r2.rmseHistory))
+    assert(bits(r1.sampleRmseHistory) === bits(r2.sampleRmseHistory))
+    assert(factorBits(r1) === factorBits(r2))
+  }
+
+  test("both RMSE traces are reproducible bit for bit, both modes") {
+    val s = spark
+    import s.implicits._
+    val df = rank2Matrix(25, 20, seed = 5L).toDF("row", "col", "v")
+    for (distributed <- Seq(false, true)) {
+      val opts = Gibbs.Options(numLatent = 4, burnin = 2, samples = 3, alpha = 20.0,
+        seed = 13L, distributedFactors = Some(distributed))
+      val r1 = Macau.fit(spark, df, Seq("row", "col"), "v", opts)
+      val r2 = Macau.fit(spark, df, Seq("row", "col"), "v", opts)
+      assert(bits(r1.rmseHistory) === bits(r2.rmseHistory), s"distributed=$distributed")
+      assert(bits(r1.sampleRmseHistory) === bits(r2.sampleRmseHistory),
+        s"distributed=$distributed")
+    }
+  }
+
+  test("broadcast mode: factors and per-cell predictions do not depend on the partition count") {
+    val s = spark
+    import s.implicits._
+    val base = Gibbs.Options(numLatent = 3, burnin = 2, samples = 2, alpha = 20.0,
+      seed = 71L, distributedFactors = Some(false))
+    val rank2 = rank2Matrix(20, 15, seed = 3L).toDF("row", "col", "v")
+    val tensor = (for (i <- 0 until 8; j <- 0 until 6; c <- 0 until 4)
+      yield (i.toLong, j.toLong, c.toLong, CbRng.gaussian(73L, 1L, i * 100L + j * 10L + c, 0L)))
+      .toDF("a", "b", "c", "v")
+    val multi = RelationData(
+      Map("row" -> Entity("row", 20), "col" -> Entity("col", 15),
+          "col2" -> Entity("col2", 10)),
+      Seq(Relation("r1", rank2, Seq("row", "col"), Seq("row", "col"), "v"),
+          Relation("r2", (for (i <- 0 until 20; j <- 0 until 10)
+              yield (i.toLong, j.toLong, CbRng.gaussian(79L, 1L, i.toLong, j.toLong)))
+            .toDF("row", "col2", "v"),
+            Seq("row", "col2"), Seq("row", "col2"), "v")))
+    val binary = rank2.withColumn("v", when($"v" > 0, 1.0).otherwise(0.0))
+    val multiSplit = Macau.assignToTest(multi, 0.2)
+    val runs: Seq[(String, () => Gibbs.Result)] = Seq(
+      "rank2" -> (() => Macau.fit(spark, rank2, Seq("row", "col"), "v", base)),
+      "tensor" -> (() => Macau.fit(spark, tensor, Seq("a", "b", "c"), "v", base)),
+      "multi-relation" -> (() => Macau.macau(spark, multiSplit.train, multiSplit.test, base)),
+      "probit" -> (() => Macau.fit(spark, binary, Seq("row", "col"), "v",
+        base.copy(binaryProbit = true))))
+    // only the RMSE scalars may differ: they are sums in partition order
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    try {
+      for ((name, run) <- runs) {
+        val outs = Seq(1, 4, 7).map { p =>
+          spark.conf.set(key, p.toString)
+          val r = run()
+          (factorBits(r), cellBits(r))
+        }
+        assert(outs.head._2.nonEmpty, name)
+        outs.tail.foreach(o => assert(o === outs.head, s"$name differs across partition counts"))
+      }
+    } finally spark.conf.set(key, prev)
+  }
+
+  test("broadcast sweeps after the one-time index build shuffle nothing") {
+    // per-sweep tripwire: two more burn-in sweeps may add one draw job
+    // per entity type and sweep, and no shuffle byte
+    val (rd, test, _) = linkedMacau(42L)
+    def trainCost(burnin: Int): (Int, Long) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+      val bytes = new java.util.concurrent.atomic.AtomicLong(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          if (e.taskMetrics != null) bytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        Gibbs.train(spark, rd, test, Gibbs.Options(numLatent = 4, burnin = burnin, samples = 2,
+          seed = 42L, distributedFactors = Some(false)))
+        // the listener bus is asynchronous: wait until both counts settle
+        var prev = (-1, -1L)
+        while ((jobs.get(), bytes.get()) != prev) {
+          prev = (jobs.get(), bytes.get()); Thread.sleep(200)
+        }
+        prev
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val (jobs2, bytes2) = trainCost(2)
+    val (jobs4, bytes4) = trainCost(4)
+    assert(bytes2 > 0, "the index build should shuffle once")
+    assert(bytes4 === bytes2, s"two more sweeps shuffled ${bytes4 - bytes2} bytes")
+    assert(jobs4 - jobs2 <= 2 * rd.entities.size,
+      s"two more sweeps ran ${jobs4 - jobs2} jobs for ${rd.entities.size} entity types")
+  }
 }

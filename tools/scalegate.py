@@ -75,8 +75,9 @@ def run_probe(reps, queries, dirs):
     cmd = ['sbt', '-batch',
            f"runMain graft.BenchOne {','.join(queries)} {reps} "
            + ' '.join(dirs)]
+    # the host's cores unless the caller pins a count, as perfbench does
     env = dict(os.environ, SPARK_GRAFT_CPUS=os.environ.get(
-        'SPARK_GRAFT_CPUS', '32'))
+        'SPARK_GRAFT_CPUS', str(os.cpu_count() or 1)))
     p = subprocess.run(cmd, cwd=ROOT, env=env, capture_output=True,
                        text=True)
     lines = [l for l in p.stdout.splitlines()
