@@ -2,7 +2,6 @@ package graft.bdf
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ArrayBuilder
@@ -50,22 +49,21 @@ private[bdf] object CellIndex {
     val nOthers = rs.map(_._1.modeCols.length - 1).toArray
     val chunks = rs.zipWithIndex.map { case ((r, m), b) =>
       val arity = r.modeCols.length
-      r.df.select(r.modeCols.map(col(_).cast("long")) :+ col(r.valueCol).cast("double"): _*)
-        .rdd.mapPartitions { rows =>
-          val ids = Array.fill(parts)(ArrayBuilder.make[Long])
-          val others = Array.fill(parts)(ArrayBuilder.make[Int])
-          val values = Array.fill(parts)(ArrayBuilder.make[Double])
-          rows.foreach { row =>
-            val id = row.getLong(m)
-            val p = hp.getPartition(id)
-            ids(p) += id
-            var c = 0
-            while (c < arity) { if (c != m) others(p) += row.getLong(c).toInt; c += 1 }
-            values(p) += row.getDouble(arity)
-          }
-          Iterator.range(0, parts).map(p => (p, Chunk(b, ids(p).result(), others(p).result(),
-            values(p).result()))).filter(_._2.ids.nonEmpty)
+      r.cells.mapPartitions { rows =>
+        val ids = Array.fill(parts)(ArrayBuilder.make[Long])
+        val others = Array.fill(parts)(ArrayBuilder.make[Int])
+        val values = Array.fill(parts)(ArrayBuilder.make[Double])
+        rows.foreach { row =>
+          val id = row.getLong(m)
+          val p = hp.getPartition(id)
+          ids(p) += id
+          var c = 0
+          while (c < arity) { if (c != m) others(p) += row.getLong(c).toInt; c += 1 }
+          values(p) += row.getDouble(arity)
         }
+        Iterator.range(0, parts).map(p => (p, Chunk(b, ids(p).result(), others(p).result(),
+          values(p).result()))).filter(_._2.ids.nonEmpty)
+      }
     }
     // the keys are partition ids below `parts`, which hp maps to themselves
     rd.relations.head.df.sparkSession.sparkContext.union(chunks).partitionBy(hp)

@@ -25,7 +25,9 @@ import org.apache.spark.sql.functions._
   *    and reach the cells through joins.
   * Both modes hand each entity's (z, v, aw) rows to the one kernel in
   * [[Conditional]] (conditional draw, prior draw, probit latent) and
-  * fold post-burn-in samples through one [[Posterior]]. Every draw is a
+  * fold post-burn-in samples through one [[Posterior]], which indexes
+  * the test cells once and folds each kept sample in one narrow job
+  * (broadcast mode predicts the cells inside that job). Every draw is a
   * counter-based pure function of (seed, iter, entity, id). In broadcast
   * mode each id's cells also reach the kernel in one fixed order, so
   * without sampleAlpha the factors and per-cell predictions do not
@@ -96,10 +98,11 @@ object Gibbs {
   private[bdf] final case class NW(mu: DenseVector[Double], lambda: DenseMatrix[Double])
 
   final case class Result(
-      /** Posterior predictions for the test cells of relation 0:
-        * (row_id, ids: Array[Long], v, pred, pred_std) — pred is the
-        * posterior mean over kept samples (clamped if configured),
-        * pred_std the posterior predictive standard deviation. */
+      /** Posterior predictions for the test cells of relation 0, one
+        * row per test row: (row_id, ids: array<bigint>, v, pred,
+        * pred_std) — pred is the posterior mean over kept samples
+        * (clamped if configured), pred_std the posterior predictive
+        * standard deviation. */
       predictions: DataFrame,
       rmseHistory: Seq[Double],
       finalRmse: Double,
@@ -126,15 +129,18 @@ object Gibbs {
         * Diagnostics.rHat needs for multi-chain convergence checks. */
       sampleRmseHistory: Seq[Double] = Nil,
       /** Running per-test-cell posterior SUFFICIENT STATISTICS over the
-        * kept samples: (row_id, ids, v, n_samples, pred_sum,
-        * pred_sq_sum) — exactly the state `predictions`' (pred,
-        * pred_std) derive from. Macau.saveModel persists this table so
+        * kept samples, one row per test row: (row_id, ids, v, n_samples,
+        * pred_sum, pred_sq_sum) — exactly the state `predictions`' (pred,
+        * pred_std) derive from. It is read from the posterior's test
+        * index, so `ids` is array<bigint> whatever the test table's
+        * element type. Macau.saveModel persists this table so
         * a LOADED model answers uncertainty (posterior-std /
         * credible-shaped) queries, not just point predictions, and two
         * saved runs can be MERGED by adding moments (mean+M2 style
         * combine) — see Macau.predictionsFromMoments. */
       predMoments: Option[DataFrame] = None,
-      /** Thinned posterior sample trace (row_id, sample_idx, pred) —
+      /** Thinned posterior sample trace (row_id, sample_idx, pred), one
+        * row per test row and retained sample —
         * present iff Options.keepSamples > 0. sample_idx is the
         * 0-based post-burn-in sweep index, so two chains' retained
         * samples are distinguishable after a union. Persisted by
@@ -171,7 +177,6 @@ object Gibbs {
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val index: Map[String, RDD[CellIndex]] =
       entNames.map(e => e -> CellIndex.build(rd, e, parts)).toMap
-    val testCoo = test.persist()
 
     // --- mutable driver state: factor matrices (rows = items) ---
     val factors: scala.collection.mutable.Map[String, DenseMatrix[Double]] =
@@ -227,7 +232,8 @@ object Gibbs {
 
     var alpha = opts.alpha
     var lastHyper: Map[String, NW] = Map.empty
-    val posterior = new Posterior(testCoo, opts)
+    val rel0 = rd.relations.head
+    val posterior = new Posterior(test, rel0.modeEntities.length, opts)
 
     val sc = spark.sparkContext
 
@@ -346,10 +352,9 @@ object Gibbs {
       //       mode-0 entity (whose first block they are), summed per
       //       partition and folded here in partition order --
       if (opts.sampleAlpha) {
-        val r0 = rd.relations.head
-        val bcs = r0.modeEntities.map(n => sc.broadcast(toArrays(factors(n))))
+        val bcs = rel0.modeEntities.map(n => sc.broadcast(toArrays(factors(n))))
         val kk = k
-        val partials = index(r0.modeEntities.head).map { part =>
+        val partials = index(rel0.modeEntities.head).map { part =>
           val blk = part.blocks(0)
           val fs = bcs.map(_.value)
           var sse = 0.0
@@ -368,14 +373,15 @@ object Gibbs {
         alpha = rng.nextGamma(1.0 + n / 2.0) / (1.0 + sse / 2.0)
       }
 
-      // -- (e) post burn-in: fold prediction into the running mean
-      //       (and sum of squares, for the posterior predictive std) --
+      // -- (e) post burn-in: predict every test cell in the posterior's
+      //       job, against relation 0's broadcast factors, and fold the
+      //       predictions into the running sums --
       if (iter >= opts.burnin) {
-        val pred = predictor(spark, rd.relations.head, factors, k)
-        posterior.add(testCoo.select(col("row_id"), col("ids"), col("v"))
-          .as[(Long, Seq[Long], Double)]
-          .map { case (rowId, ids, v) => (rowId, v, pred(ids)) }.toDF("row_id", "v", "pred"),
+        val bcs = rel0.modeEntities.map(n => sc.broadcast(toArrays(factors(n)))).toArray
+        val kk = k
+        posterior.add(posterior.index.map(cells => predict(bcs.map(_.value), cells, kk)),
           iter - opts.burnin)
+        bcs.foreach(_.destroy())
       }
     }
 
@@ -587,19 +593,18 @@ object Gibbs {
     }
   }
 
-  /** Cell prediction sum_k prod_m U_m(ids_m, k) from `rel`'s current
-    * factors, broadcast once — for use inside executor closures. */
-  private def predictor(spark: SparkSession, rel: Relation,
-                        factors: scala.collection.mutable.Map[String, DenseMatrix[Double]],
-                        k: Int): Seq[Long] => Double = {
-    val bcs = rel.modeEntities.map(e => spark.sparkContext.broadcast(toArrays(factors(e))))
-    ids => {
+  /** Each test cell's prediction sum_k prod_m U_m(ids_m, k), from one
+    * factor matrix per mode (`fs`) — for use inside executor closures. */
+  private def predict(fs: Array[Array[Array[Double]]], cells: Posterior.Cells,
+                      k: Int): Array[Double] = {
+    val a = fs.length
+    Array.tabulate(cells.v.length) { c =>
       var dot = 0.0
       var j = 0
       while (j < k) {
         var p = 1.0
         var m = 0
-        while (m < ids.length) { p *= bcs(m).value(ids(m).toInt)(j); m += 1 }
+        while (m < a) { p *= fs(m)(cells.ids(c * a + m).toInt)(j); m += 1 }
         dot += p
         j += 1
       }

@@ -80,7 +80,7 @@ object GibbsDistributed {
     val betas = scala.collection.mutable.Map[String, DenseMatrix[Double]]()
     val lambdaBetas = scala.collection.mutable.Map[String, Double]()
     var lastHyper: Map[String, Gibbs.NW] = Map.empty
-    val posterior = new Posterior(testCoo, opts)
+    val posterior = new Posterior(testCoo, rd.relations.head.modeEntities.length, opts)
     var alphaCur = opts.alpha
 
     /** z = elementwise product over the given modes' factor rows,
@@ -300,13 +300,15 @@ object GibbsDistributed {
           (1.0 + r.getDouble(0) / 2.0)
       }
 
-      // -- (e) post burn-in: fold prediction into the running mean --
+      // -- (e) post burn-in: predict the test cells through the factor
+      //       joins, move the predictions onto the posterior's test
+      //       index and fold them into the running sums --
       if (iter >= opts.burnin) {
         val rel = rd.relations.head
-        posterior.add(withZ(testCoo.select(col("row_id"), col("ids"), col("v")), rel,
-            rel.modeEntities.indices)
-          .select(col("row_id"), col("v"),
-                  expr("aggregate(z, 0D, (acc, x) -> acc + x)").as("pred")),
+        posterior.add(posterior.align(
+          withZ(testCoo.select(col("row_id"), col("ids")), rel, rel.modeEntities.indices)
+            .select(col("row_id").cast("long"), expr("aggregate(z, 0D, (acc, x) -> acc + x)"))
+            .rdd.map(r => (r.getLong(0), r.getDouble(1)))),
           iter - opts.burnin)
       }
     }

@@ -222,15 +222,16 @@ object Macau {
     * pred = sum_k prod_m U_m(id_m, k) — the same elementwise-product
     * rule the sampler uses (BPMF dot product; Macau §2.4 for arity>2),
     * computed by joining each mode's factor table (AQE broadcasts small
-    * factor sides automatically). */
+    * factor sides automatically). The product starts from the first
+    * mode's factor row, which equals the sampler's 1.0-seeded product
+    * bit for bit, and needs no job to learn K. */
   def predict(spark: SparkSession, factors: Map[String, DataFrame],
               cells: DataFrame, modeEntities: Seq[String]): DataFrame = {
-    val k = factors(modeEntities.head).select(size(col("f"))).head().getInt(0)
-    var df = cells.withColumn("z", expr(s"array_repeat(1.0D, $k)"))
+    var df = cells
     modeEntities.zipWithIndex.foreach { case (e, m) =>
       val f = factors(e).select(col("id").as(s"fid$m"), col("f").as(s"f$m"))
       df = df.join(f, col(e).cast("long") === col(s"fid$m"))
-        .withColumn("z", expr(s"zip_with(z, f$m, (a, b) -> a * b)"))
+        .withColumn("z", if (m == 0) col("f0") else expr(s"zip_with(z, f$m, (a, b) -> a * b)"))
         .drop(s"fid$m", s"f$m")
     }
     df.withColumn("pred", expr("aggregate(z, 0D, (acc, x) -> acc + x)"))

@@ -1,5 +1,6 @@
 package graft.bdf
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -61,6 +62,12 @@ final case class Relation(
     alpha: Option[Double] = None) {
   require(modeCols.length == modeEntities.length && modeCols.length >= 2)
 
+  /** The cells as rows of (mode ids as long..., value as double):
+    * planned once per Relation, like `Dataset.rdd`, and read by
+    * validation and by every [[CellIndex]] build. */
+  @transient private[bdf] lazy val cells: RDD[Row] =
+    df.select(modeCols.map(col(_).cast("long")) :+ col(valueCol).cast("double"): _*).rdd
+
   /** Normalized COO projection: ids array + value. */
   def coo: DataFrame =
     df.select(array(modeCols.map(c => col(c).cast("long")): _*).as("ids"),
@@ -82,24 +89,22 @@ final case class RelationData(
     val cols = r.modeCols :+ r.valueCol
     val sizes = r.modeEntities.map(entities(_).numItems.toLong).toArray
     // per partition: the cell count and the first bad row of each column
-    val parts = r.df
-      .select(r.modeCols.map(col(_).cast("long")) :+ col(r.valueCol).cast("double"): _*)
-      .rdd.mapPartitions { it =>
-        val bad = new Array[Row](sizes.length + 1)
-        var n = 0L
-        it.foreach { row =>
-          n += 1
-          var c = 0
-          while (c < bad.length) {
-            if (bad(c) == null && (row.isNullAt(c) ||
-                (if (c < sizes.length) row.getLong(c) < 0 || row.getLong(c) >= sizes(c)
-                 else !java.lang.Double.isFinite(row.getDouble(c)))))
-              bad(c) = row
-            c += 1
-          }
+    val parts = r.cells.mapPartitions { it =>
+      val bad = new Array[Row](sizes.length + 1)
+      var n = 0L
+      it.foreach { row =>
+        n += 1
+        var c = 0
+        while (c < bad.length) {
+          if (bad(c) == null && (row.isNullAt(c) ||
+              (if (c < sizes.length) row.getLong(c) < 0 || row.getLong(c) >= sizes(c)
+               else !java.lang.Double.isFinite(row.getDouble(c)))))
+            bad(c) = row
+          c += 1
         }
-        Iterator((n, bad))
-      }.collect()
+      }
+      Iterator((n, bad))
+    }.collect()
     require(parts.map(_._1).sum > 0, s"relation ${r.name} is empty")
     cols.indices.foreach { c =>
       parts.map(_._2(c)).find(_ != null).foreach { row =>

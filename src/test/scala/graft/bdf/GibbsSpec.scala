@@ -675,36 +675,88 @@ class GibbsSpec extends SparkSpec {
     } finally spark.conf.set(key, prev)
   }
 
+  /** Spark jobs started and shuffle bytes written while `run` runs. */
+  private def jobsAndShuffleBytes(run: => Unit): (Int, Long) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val bytes = new java.util.concurrent.atomic.AtomicLong(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) bytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      run
+      // the listener bus is asynchronous: wait until both counts settle
+      var prev = (-1, -1L)
+      while ((jobs.get(), bytes.get()) != prev) {
+        prev = (jobs.get(), bytes.get()); Thread.sleep(200)
+      }
+      prev
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("broadcast sweeps after the one-time index build shuffle nothing") {
     // per-sweep tripwire: two more burn-in sweeps may add one draw job
     // per entity type and sweep, and no shuffle byte
     val (rd, test, _) = linkedMacau(42L)
-    def trainCost(burnin: Int): (Int, Long) = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val bytes = new java.util.concurrent.atomic.AtomicLong(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (e.taskMetrics != null) bytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        Gibbs.train(spark, rd, test, Gibbs.Options(numLatent = 4, burnin = burnin, samples = 2,
-          seed = 42L, distributedFactors = Some(false)))
-        // the listener bus is asynchronous: wait until both counts settle
-        var prev = (-1, -1L)
-        while ((jobs.get(), bytes.get()) != prev) {
-          prev = (jobs.get(), bytes.get()); Thread.sleep(200)
-        }
-        prev
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
+    def trainCost(burnin: Int): (Int, Long) = jobsAndShuffleBytes(Gibbs.train(spark, rd, test,
+      Gibbs.Options(numLatent = 4, burnin = burnin, samples = 2, seed = 42L,
+        distributedFactors = Some(false))))
     val (jobs2, bytes2) = trainCost(2)
     val (jobs4, bytes4) = trainCost(4)
     assert(bytes2 > 0, "the index build should shuffle once")
     assert(bytes4 === bytes2, s"two more sweeps shuffled ${bytes4 - bytes2} bytes")
     assert(jobs4 - jobs2 <= 2 * rd.entities.size,
       s"two more sweeps ran ${jobs4 - jobs2} jobs for ${rd.entities.size} entity types")
+  }
+
+  test("each kept sample after the one-time test index is one narrow job") {
+    // kept-sample tripwire: two more kept samples may add one draw job
+    // per entity type and one posterior job each, and no shuffle byte
+    val (rd, test, _) = linkedMacau(42L)
+    def trainCost(samples: Int): (Int, Long) = jobsAndShuffleBytes(Gibbs.train(spark, rd, test,
+      Gibbs.Options(numLatent = 4, burnin = 2, samples = samples, seed = 42L,
+        distributedFactors = Some(false))))
+    val (jobs2, bytes2) = trainCost(2)
+    val (jobs4, bytes4) = trainCost(4)
+    assert(bytes4 === bytes2, s"two more kept samples shuffled ${bytes4 - bytes2} bytes")
+    assert(jobs4 - jobs2 <= 2 * (rd.entities.size + 1),
+      s"two more kept samples ran ${jobs4 - jobs2} jobs for ${rd.entities.size} entity types")
+  }
+
+  test("result tables: fixed columns and types, one row per test row, both modes") {
+    val s = spark
+    import s.implicits._
+    val df = rank2Matrix(20, 15, seed = 3L).toDF("row", "col", "v")
+    val split = Macau.assignToTest(RelationData.fromDF(df, Seq("row", "col"), "v"), 0.1)
+    // a repeated cell (legal input) and int mode ids, which come back as bigint
+    val test = split.test.unionByName(split.test.orderBy("row_id").limit(1))
+      .withColumn("ids", $"ids".cast("array<int>"))
+    val n = test.count()
+    assert(n === split.test.count() + 1)
+    def types(t: org.apache.spark.sql.DataFrame) =
+      t.schema.map(f => f.name -> f.dataType.catalogString)
+    for (distributed <- Seq(false, true)) {
+      val res = Gibbs.train(spark, split.train, test, Gibbs.Options(numLatent = 3, burnin = 2,
+        samples = 3, alpha = 20.0, seed = 71L, keepSamples = 2,
+        distributedFactors = Some(distributed)))
+      val mode = s"distributed=$distributed"
+      assert(types(res.predictions) === Seq("row_id" -> "bigint", "ids" -> "array<bigint>",
+        "v" -> "double", "pred" -> "double", "pred_std" -> "double"), mode)
+      assert(types(res.predMoments.get) === Seq("row_id" -> "bigint", "ids" -> "array<bigint>",
+        "v" -> "double", "n_samples" -> "int", "pred_sum" -> "double", "pred_sq_sum" -> "double"),
+        mode)
+      assert(types(res.samplePreds.get) === Seq("row_id" -> "bigint", "sample_idx" -> "int",
+        "pred" -> "double"), mode)
+      assert(res.predictions.count() === n, mode)
+      assert(res.predMoments.get.count() === n, mode)
+      assert(res.samplePreds.get.count() === 2 * n, mode)
+      // the RMSE counts every test row once
+      val mse = res.predictions.select(avg(pow($"pred" - $"v", 2))).head().getDouble(0)
+      assert(math.abs(res.finalRmse - math.sqrt(mse)) <= 1e-12 * res.finalRmse,
+        s"rmse ${res.finalRmse} vs ${math.sqrt(mse)}, $mode")
+    }
   }
 }
