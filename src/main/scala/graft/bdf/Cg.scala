@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions.col
   * pass over the row-partitioned feature matrix computing
   * X^T (X p) + lambda p via treeAggregate. This is the scale path for
   * side-info matrices whose Gram matrix (F x F) or row count make the
-  * driver-side Cholesky in Gibbs.sampleBeta infeasible; the per-pass
+  * driver-side Cholesky in BroadcastStore.drawLink infeasible; the per-pass
   * cost is O(nnz(X) * K) and the driver only ever holds F x K state.
   *
   * Rows may be DENSE (features: array<double>) or SPARSE

@@ -4,9 +4,9 @@ import breeze.linalg.{cholesky, DenseMatrix, DenseVector, MatrixNotSymmetricExce
   NotConvergedException}
 
 /** The per-entity sampling math of one Gibbs sweep, shared by both
-  * execution modes ([[Gibbs]] broadcasts the opposite-mode factors,
-  * [[GibbsDistributed]] joins them in; both hand the resulting rows to
-  * these functions).
+  * factor stores ([[BroadcastStore]] broadcasts the opposite-mode
+  * factors, [[DistributedStore]] joins them in; both hand the resulting
+  * rows to these functions).
   *
   * An entity observed in cells with opposite-mode products z (Macau
   * §2.4; the plain BPMF dot product at arity 2) and values v is drawn

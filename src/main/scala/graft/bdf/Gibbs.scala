@@ -1,9 +1,9 @@
 package graft.bdf
 
 import breeze.linalg.{cholesky, DenseMatrix, DenseVector}
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+
+import scala.collection.mutable
 
 /** Blocked Gibbs sampler for Bayesian matrix/tensor factorization with
   * side information — the engine core mirroring the reference's
@@ -11,32 +11,30 @@ import org.apache.spark.sql.functions._
   * Normal-Wishart hyperpriors; Macau arXiv:1509.04610 §2.3 multi-
   * relation coupling, §2.4 tensors, §3.2 side-information link term).
   *
-  * [[train]] validates its input, then runs one of two execution modes
-  * that differ only in how an entity's observed cells meet the
-  * opposite-mode factors and where the factors live:
-  *  - broadcast (this object): at entry, each entity type's cells are
-  *    indexed once into persisted per-partition CSR blocks
-  *    ([[CellIndex]], the IndexedDF analog; its one shuffle runs in the
-  *    first sweep). Each sweep ships the (small) factor matrices from
-  *    the driver to executors as broadcasts — the Spark analog of the
-  *    reference's SharedArray zero-copy factors — and draws each entity
-  *    type in one narrow job over its index, shuffling nothing;
-  *  - distributed ([[GibbsDistributed]]): factor tables stay DataFrames
-  *    and reach the cells through joins.
-  * Both modes hand each entity's (z, v, aw) rows to the one kernel in
+  * [[train]] validates its input, picks a [[FactorStore]] and runs one
+  * sweep loop over it: (a) each entity type's Normal-Wishart hyperprior
+  * from the store's statistics, (b) the side-info link draw, (c) the
+  * per-entity conditional draws, (d) the noise precision, (e) the
+  * posterior fold. The two stores differ only in where the factors live
+  * and how an entity's observed cells meet the opposite-mode factors:
+  *  - [[BroadcastStore]]: driver matrices, shipped to the executors as
+  *    broadcasts; each entity type's cells are indexed once
+  *    ([[CellIndex]]) and drawn in one narrow job per sweep;
+  *  - [[DistributedStore]]: (id, f) DataFrames that reach the cells
+  *    through joins, for factors that outgrow the driver.
+  * Both hand each entity's (z, v, aw) rows to the one kernel in
   * [[Conditional]] (conditional draw, prior draw, probit latent) and
   * fold post-burn-in samples through one [[Posterior]], which indexes
-  * the test cells once and folds each kept sample in one narrow job
-  * (broadcast mode predicts the cells inside that job). Every draw is a
-  * counter-based pure function of (seed, iter, entity, id). In broadcast
-  * mode each id's cells also reach the kernel in one fixed order, so
-  * without sampleAlpha the factors and per-cell predictions do not
-  * depend on partitioning; the RMSE traces (and alpha's SSE) are
-  * partition sums folded in partition order, reproducible for a fixed
-  * partitioning.
+  * the test cells once and folds each kept sample in one narrow job.
+  * Every draw is a counter-based pure function of (seed, iter, entity,
+  * id). In broadcast mode each id's cells also reach the kernel in one
+  * fixed order, so without sampleAlpha the factors and per-cell
+  * predictions do not depend on partitioning; the RMSE traces and
+  * alpha's SSE are partition sums folded in partition order,
+  * reproducible for a fixed partitioning.
   */
 object Gibbs {
-  import Conditional.{lowerSolve, upperSolveT}
+  import Conditional.upperSolveT
 
   final case class Options(
       numLatent: Int = 16,
@@ -65,18 +63,13 @@ object Gibbs {
         * both execution modes; final values observable via
         * [[Result.linkPrecisions]]. */
       sampleLambdaBeta: Boolean = false,
-      /** Solve the side-info link with the distributed CG (Cg.scala)
-        * instead of the driver Cholesky — the path for side matrices
-        * too large for the driver (Macau §3.2). */
-      useCgSideSolver: Boolean = false,
       /** Keep factor matrices as DataFrames and run the sweep with
         * shuffle joins instead of driver collection + broadcast — the
-        * path for entity counts whose N x K factors no longer fit the
-        * driver (see GibbsDistributed). Side info runs through the
-        * distributed CG in this mode. None (default) = decide at
-        * train() entry from the broadcast mode's driver footprint
-        * (N x K factors + N x F densified side matrices) vs
-        * [[autoDistributedDoubles]]. */
+        * path for entity counts whose N x K factors, or side matrices
+        * whose N x F rows and F x F Gram, no longer fit the driver (see
+        * DistributedStore). Side info runs through the distributed CG
+        * in this mode. None (default) = decide at train() entry from
+        * [[broadcastFootprint]] vs [[autoDistributedDoubles]]. */
       distributedFactors: Option[Boolean] = None,
       /** Auto-mode threshold: broadcast mode is allowed up to this many
         * driver-resident doubles (default 32M ~ 256 MB). */
@@ -149,11 +142,15 @@ object Gibbs {
       samplePreds: Option[DataFrame] = None)
 
   /** Driver-resident doubles the broadcast mode would allocate: the
-    * N x K factor matrix per entity plus the densified N x F side
-    * matrix where side info is attached (sparse side features count at
-    * their dense width — that is what the broadcast path materializes). */
+    * N x K factor matrix per entity plus, where side info is attached,
+    * the densified N x F side matrix and its F x F Gram matrix (sparse
+    * side features count at their dense width — that is what the
+    * broadcast mode materializes). */
   private[bdf] def broadcastFootprint(rd: RelationData, k: Int): Long =
-    rd.entities.valuesIterator.map(ent => ent.numItems.toLong * (k + ent.sideWidth)).sum
+    rd.entities.valuesIterator.map { ent =>
+      val f = ent.sideWidth.toLong
+      ent.numItems.toLong * (k + f) + f * f
+    }.sum
 
   def train(spark: SparkSession, rd: RelationData, test: DataFrame,
             opts: Options): Result = {
@@ -162,235 +159,52 @@ object Gibbs {
     rd.validate()
     // auto mode switch: an explicit flag wins; otherwise route by the
     // broadcast mode's would-be driver footprint
-    val useDistributed = opts.distributedFactors.getOrElse(
-      broadcastFootprint(rd, opts.numLatent) > opts.autoDistributedDoubles)
-    if (useDistributed) {
-      return GibbsDistributed.train(spark, rd, test, opts)
-    }
-    import spark.implicits._
-    val k = opts.numLatent
-    val entNames = rd.entities.keys.toSeq.sorted
-    val sizes = entNames.map(e => e -> rd.entities(e).numItems).toMap
+    val store: FactorStore =
+      if (opts.distributedFactors.getOrElse(
+            broadcastFootprint(rd, opts.numLatent) > opts.autoDistributedDoubles))
+        new DistributedStore(spark, rd, test, opts)
+      else new BroadcastStore(spark, rd, opts)
+    try {
+      val entNames = rd.entities.keys.toSeq.sorted
+      val posterior = new Posterior(test, rd.relations.head.modeEntities.length, opts)
+      val betas = mutable.Map[String, DenseMatrix[Double]]()
+      val lambdaBetas = mutable.Map[String, Double]()
+      var lastHyper: Map[String, NW] = Map.empty
+      var alpha = opts.alpha
 
-    // --- the cell index per entity type (the IndexedDF analog): one
-    // shuffle at the first sweep, then read in place by every draw ---
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val index: Map[String, RDD[CellIndex]] =
-      entNames.map(e => e -> CellIndex.build(rd, e, parts)).toMap
+      for (iter <- 0 until (opts.burnin + opts.samples)) {
+        // -- (a) Normal-Wishart hyperprior draw per entity (driver, K x K) --
+        val hyper: Map[String, NW] = entNames.map { e =>
+          val (n, mean, scatter) = store.nwStats(e)
+          e -> sampleNWFromStats(n, mean, scatter, opts.seed, iter, e.hashCode)
+        }.toMap
+        lastHyper = hyper
 
-    // --- mutable driver state: factor matrices (rows = items) ---
-    val factors: scala.collection.mutable.Map[String, DenseMatrix[Double]] =
-      scala.collection.mutable.Map(entNames.map { e =>
-        val m = DenseMatrix.tabulate[Double](sizes(e), k)((i, j) =>
-          0.3 * CbRng.gaussian(opts.seed, -1L, e.hashCode.toLong, i.toLong, j.toLong))
-        e -> m
-      }: _*)
-
-    // side-info (Macau §3.2): collected driver-side (scale path: keep
-    // distributed and run CG with DataFrame matvecs — see
-    // GibbsDistributed, which also keeps sparse rows sparse). A sparse
-    // (indices, values) side table is densified here: this path is the
-    // small-data one by construction. Dense features are checked for
-    // finiteness as they are copied, so that check costs no job (a
-    // sparse table's width job checks its values).
-    val sideData: Map[String, Array[Array[Double]]] = rd.entities.collect {
-      case (name, ent @ Entity(_, n, Some(sideDf))) =>
-        val arr = Array.ofDim[Array[Double]](n)
-        if (sideDf.columns.contains("indices")) {
-          val fDim = ent.sideWidth
-          sideDf.select(col("id").cast("long"), col("indices"), col("values"))
-            .collect().foreach { r =>
-              val dense = new Array[Double](fDim)
-              val ix = r.getSeq[Int](1); val v = r.getSeq[Double](2)
-              var q = 0
-              while (q < ix.length) { dense(ix(q)) = v(q); q += 1 }
-              arr(r.getLong(0).toInt) = dense
-            }
-        } else {
-          sideDf.select(col("id").cast("long"), col("features")).collect().foreach { r =>
-            val xs = r.getSeq[Double](1)
-            require(xs.forall(x => java.lang.Double.isFinite(x)),
-              s"entity $name side table: non-finite value in column features at row " +
-                s"(id=${r.getLong(0)}, features=${xs.mkString("[", ",", "]")})")
-            arr(r.getLong(0).toInt) = xs.toArray
-          }
+        // -- (b) side-info link draw (Macau §3.2 ridge + noise injection) --
+        for (e <- entNames if rd.entities(e).side.isDefined) {
+          val beta = store.drawLink(e, hyper(e), lambdaBetas.getOrElse(e, opts.lambdaBeta), iter)
+          betas(e) = beta
+          if (opts.sampleLambdaBeta)
+            lambdaBetas(e) = drawLambdaBeta(beta, hyper(e).lambda, opts.seed, iter, e.hashCode)
         }
-        // ids absent from the side table (legal: a sparse COO source
-        // omits all-zero rows) get an all-zero feature row — never null
-        val fDim0 = arr.collectFirst { case a if a != null => a.length }
-        require(fDim0.isDefined, s"side table for entity $name is empty")
-        var i0 = 0
-        while (i0 < n) {
-          if (arr(i0) == null) arr(i0) = new Array[Double](fDim0.get)
-          i0 += 1
+
+        // -- (c) per-entity conditional draws --
+        entNames.foreach(e => store.draw(e, hyper(e), alpha, iter))
+
+        // -- (d) noise precision draw from relation 0's residuals (Macau §2.1) --
+        if (opts.sampleAlpha) {
+          val (sse, n) = store.sse()
+          val rng = new RngStream(opts.seed, 1000L + iter)
+          alpha = rng.nextGamma(1.0 + n / 2.0) / (1.0 + sse / 2.0)
         }
-        name -> arr
-    }
-    val betas = scala.collection.mutable.Map[String, DenseMatrix[Double]]()
-    val linkMeans = scala.collection.mutable.Map[String, DenseMatrix[Double]]()
-    val lambdaBetas = scala.collection.mutable.Map[String, Double]()
 
-    var alpha = opts.alpha
-    var lastHyper: Map[String, NW] = Map.empty
-    val rel0 = rd.relations.head
-    val posterior = new Posterior(test, rel0.modeEntities.length, opts)
-
-    val sc = spark.sparkContext
-
-    for (iter <- 0 until (opts.burnin + opts.samples)) {
-      // -- (a) Normal-Wishart hyperprior draw per entity (driver, K x K) --
-      val hyper: Map[String, NW] = entNames.map { e =>
-        val u = factors(e)
-        val shift = linkMeans.get(e)                  // beta^T x_i per item
-        val centered = shift.map(u - _).getOrElse(u)
-        e -> sampleNW(centered, opts.seed, iter, e.hashCode)
-      }.toMap
-      lastHyper = hyper
-
-      // -- (b) side-info link draw (Macau §3.2 ridge + noise injection) --
-      sideData.foreach { case (e, xs) =>
-        val lb = lambdaBetas.getOrElse(e, opts.lambdaBeta)
-        val beta = sampleBeta(spark, factors(e), xs, hyper(e), opts, lb, iter, e.hashCode)
-        betas(e) = beta
-        if (opts.sampleLambdaBeta)
-          lambdaBetas(e) = drawLambdaBeta(beta, hyper(e).lambda, opts.seed, iter, e.hashCode)
-        val n = xs.length
-        val lm = DenseMatrix.zeros[Double](n, k)
-        var i = 0
-        while (i < n) {
-          val xi = DenseVector(xs(i))
-          lm(i, ::) := (beta.t * xi).t
-          i += 1
-        }
-        linkMeans(e) = lm
+        // -- (e) post burn-in: fold this sample's test predictions --
+        if (iter >= opts.burnin) posterior.add(store.predict(posterior), iter - opts.burnin)
       }
 
-      // -- (c) per-entity conditional draws: one narrow job per entity
-      //        type over its cell index, against broadcast factors --
-      for (e <- entNames) {
-        val nw = hyper(e)
-        val link = linkMeans.get(e).map(toArrays)
-        val kk = k; val seed = opts.seed; val it = iter.toLong
-        // per block (relation, mode): the other modes' factors, the
-        // cell noise precision (Macau §2.3: per relation, else the
-        // global, possibly sampled, alpha; probit's latent likelihood
-        // is unit variance) and the probit cell key's relation tag
-        val roles = CellIndex.roles(rd, e)
-        val others = roles.map { case (r, m) => r.modeEntities.patch(m, Nil, 1) }
-        val bcs = (others.flatten ++ (if (opts.binaryProbit) Seq(e) else Nil)).distinct
-          .map(n => n -> sc.broadcast(toArrays(factors(n)))).toMap
-        val perRole = roles.zip(others).map { case ((r, m), os) =>
-          (os.map(bcs).toArray, m, r.modeEntities.length,
-           if (opts.binaryProbit) 1.0 else r.alpha.getOrElse(alpha),
-           Conditional.relTag(r.name, m))
-        }.toArray
-        val bSelf = if (opts.binaryProbit) bcs(e) else null
-        val bMu = sc.broadcast(nw.mu.toArray)
-        val bLam = sc.broadcast(nw.lambda.toArray) // column-major k*k
-        val bLink = sc.broadcast(link.orNull)
-        val drawn = index(e).mapPartitions(_.flatMap { part =>
-          val fs = perRole.map(_._1.map(_.value))
-          Iterator.tabulate(part.ids.length) { i =>
-            val id = part.ids(i)
-            val rows = part.blocks.indices.iterator.flatMap { b =>
-              val blk = part.blocks(b)
-              val (_, m, arity, aw, relTag) = perRole(b)
-              Iterator.range(blk.offsets(i), blk.offsets(i + 1)).map { c =>
-                // z = elementwise product of the other modes' latents
-                // (Macau §2.4 tensor rule; arity 2 reduces to BPMF)
-                val z = Array.fill(kk)(1.0)
-                var o = 0
-                while (o < fs(b).length) {
-                  val f = fs(b)(o)(blk.others(o)(c))
-                  var j = 0
-                  while (j < kk) { z(j) *= f(j); j += 1 }
-                  o += 1
-                }
-                val v = blk.values(c)
-                // Albert-Chib: replace the 0/1 label by a truncated-
-                // normal latent around the CURRENT prediction
-                val vv = if (bSelf == null) v else {
-                  val ids = Array.tabulate(arity)(q =>
-                    if (q == m) id else blk.others(if (q < m) q else q - 1)(c).toLong)
-                  Conditional.probitLatent(z, bSelf.value(id.toInt), ids.toSeq, v,
-                    seed, it, relTag)
-                }
-                (z, vv, aw)
-              }
-            }
-            val mu0 = Conditional.shifted(bMu.value,
-              if (bLink.value == null) null else bLink.value(id.toInt))
-            (id, Conditional.draw(bLam.value, mu0, rows, kk, seed, it, e, id))
-          }
-        }).collect()
-        // the per-sweep broadcasts are dead after the collect — destroy
-        // them instead of waiting on GC-driven cleanup (N x K each,
-        // every sweep, every mode)
-        bMu.destroy(); bLam.destroy(); bLink.destroy()
-        bcs.values.foreach(_.destroy())
-
-        // fold drawn rows into the (driver) factor matrix; entities with
-        // no observations keep a pure prior draw
-        val f = factors(e)
-        def put(i: Int, u: Array[Double]): Unit = {
-          var j = 0
-          while (j < k) { f(i, j) = u(j); j += 1 }
-        }
-        val seen = new Array[Boolean](sizes(e))
-        drawn.foreach { case (id, u) => seen(id.toInt) = true; put(id.toInt, u) }
-        if (seen.contains(false)) {
-          val lChol = Conditional.priorFactor(nw.lambda, e, it)
-          val mu = nw.mu.toArray
-          for (i <- 0 until sizes(e) if !seen(i))
-            put(i, Conditional.prior(lChol, Conditional.shifted(mu, link.map(_(i)).orNull),
-              k, seed, it, e, i.toLong))
-        }
-      }
-
-      // -- (d) noise precision draw from residuals (Macau §2.1): the
-      //       SSE over relation 0's cells, read from the index of its
-      //       mode-0 entity (whose first block they are), summed per
-      //       partition and folded here in partition order --
-      if (opts.sampleAlpha) {
-        val bcs = rel0.modeEntities.map(n => sc.broadcast(toArrays(factors(n))))
-        val kk = k
-        val partials = index(rel0.modeEntities.head).map { part =>
-          val blk = part.blocks(0)
-          val fs = bcs.map(_.value)
-          var sse = 0.0
-          for (i <- part.ids.indices; c <- blk.offsets(i) until blk.offsets(i + 1)) {
-            val rows = fs.head(part.ids(i).toInt) +:
-              blk.others.indices.map(o => fs(o + 1)(blk.others(o)(c)))
-            val err = blk.values(c) - (0 until kk).map(j => rows.foldLeft(1.0)(_ * _(j))).sum
-            sse += err * err
-          }
-          (sse, blk.values.length.toLong)
-        }.collect()
-        bcs.foreach(_.destroy())
-        val sse = partials.foldLeft(0.0)(_ + _._1)
-        val n = partials.foldLeft(0L)(_ + _._2)
-        val rng = new RngStream(opts.seed, 1000L + iter)
-        alpha = rng.nextGamma(1.0 + n / 2.0) / (1.0 + sse / 2.0)
-      }
-
-      // -- (e) post burn-in: predict every test cell in the posterior's
-      //       job, against relation 0's broadcast factors, and fold the
-      //       predictions into the running sums --
-      if (iter >= opts.burnin) {
-        val bcs = rel0.modeEntities.map(n => sc.broadcast(toArrays(factors(n)))).toArray
-        val kk = k
-        posterior.add(posterior.index.map(cells => predict(bcs.map(_.value), cells, kk)),
-          iter - opts.burnin)
-        bcs.foreach(_.destroy())
-      }
-    }
-
-    index.values.foreach(_.unpersist())
-    posterior.result(entNames.map { e =>
-        e -> toArrays(factors(e)).zipWithIndex.map { case (f, i) => (i.toLong, f) }
-          .toSeq.toDF("id", "f")
-      }.toMap, "broadcast", betas.map { case (e, b) => e -> toArrays(b) },
-      lastHyper, lambdaBetas)
+      posterior.result(store.tables(), store.mode, betas.map { case (e, b) => e -> toArrays(b) },
+        lastHyper, lambdaBetas)
+    } finally store.close()
   }
 
   // ---------- helpers ----------
@@ -408,23 +222,9 @@ object Gibbs {
     out
   }
 
-  /** Conjugate Normal-Wishart posterior draw from factor rows
-    * (BPMF §3.1, Eq. 14): driver-side, K x K. */
-  private def sampleNW(u: DenseMatrix[Double], seed: Long, iter: Int, tag: Int): NW = {
-    val n = u.rows; val k = u.cols
-    val mean = DenseVector.tabulate(k)(j => breeze.linalg.sum(u(::, j)) / n)
-    val s = DenseMatrix.zeros[Double](k, k)
-    var i = 0
-    while (i < n) {
-      val d = u(i, ::).t - mean
-      s += d * d.t
-      i += 1
-    }
-    sampleNWFromStats(n, mean, s, seed, iter, tag)
-  }
-
-  /** Same draw from sufficient statistics (n, mean, scatter) — the
-    * distributed path aggregates these with one treeAggregate pass. */
+  /** Conjugate Normal-Wishart posterior draw (BPMF §3.1, Eq. 14) from
+    * the sufficient statistics (n, mean, scatter) of the centred factor
+    * rows: driver-side, K x K. */
   private[bdf] def sampleNWFromStats(n: Long, mean: DenseVector[Double],
                                      s: DenseMatrix[Double], seed: Long,
                                      iter: Int, tag: Int): NW = {
@@ -511,18 +311,6 @@ object Gibbs {
     }
   }
 
-  /** Side-info link draw (Macau §3.2): exact conditional for beta,
-    * whose posterior is matrix-normal with row precision
-    * (X^T X + lambda I) and column covariance Lambda^-1 (the entity's
-    * NW latent precision). Sampled via the noise-injection identity
-    *
-    *   beta = (X^T X + lambda I)^-1 (X^T (U~ + E1) + sqrt(lambda) E2)
-    *
-    * where U~ = U - mu and each row of E1 (n x K) and E2 (F x K) is an
-    * independent N(0, Lambda^-1) draw, realized as L_Lambda^-T eps.
-    * Small X solves on the driver with Cholesky; opts.useCgSideSolver
-    * switches to the distributed CG (Cg.solveNormal) that never
-    * materializes X^T X. */
   /** λβ | beta ~ Gamma(1 + F·K/2, 1 + tr(beta Λ beta^T)/2) — the
     * conjugate draw for the link precision under the matrix-normal
     * prior rows ~ N(0, λβ^-1 Λ^-1). Driver-side, O(F·K²). */
@@ -539,76 +327,5 @@ object Gibbs {
     }
     val rng = new RngStream(seed, (iter.toLong * 131L) ^ tag ^ 0x1b9aL)
     rng.nextGamma(1.0 + beta.rows * beta.cols / 2.0) / (1.0 + tr / 2.0)
-  }
-
-  private def sampleBeta(spark: SparkSession, u: DenseMatrix[Double],
-                         xs: Array[Array[Double]], nw: NW, opts: Options,
-                         lambdaBeta: Double,
-                         iter: Int, tag: Int): DenseMatrix[Double] = {
-    val n = u.rows; val k = u.cols; val fDim = xs(0).length
-    val rng = new RngStream(opts.seed, (iter.toLong << 24) ^ tag ^ 0x5ea1L)
-    val lLam = cholesky((nw.lambda + nw.lambda.t) * 0.5)
-    def lamNoiseRow(): DenseVector[Double] = {
-      val eps = DenseVector.tabulate(k)(_ => rng.nextGaussian())
-      upperSolveT(lLam, eps) // N(0, Lambda^-1)
-    }
-    // centered target + injected latent noise, one N(0, Lambda^-1) row each
-    val target = DenseMatrix.zeros[Double](n, k)
-    var i = 0
-    while (i < n) {
-      val e1 = lamNoiseRow()
-      var c = 0
-      while (c < k) { target(i, c) = u(i, c) - nw.mu(c) + e1(c); c += 1 }
-      i += 1
-    }
-    // prior-side noise: sqrt(lambda) E2, added to the RHS of the solve
-    val sqLb = math.sqrt(lambdaBeta)
-    val e2 = DenseMatrix.zeros[Double](fDim, k)
-    i = 0
-    while (i < fDim) {
-      e2(i, ::) := (lamNoiseRow() * sqLb).t
-      i += 1
-    }
-    if (opts.useCgSideSolver) {
-      import spark.implicits._
-      val xt = (0 until n).map { r =>
-        (xs(r).toSeq, (0 until k).map(c => target(r, c)).toSeq)
-      }.toDF("features", "target")
-      Cg.solveNormal(spark, xt, fDim, k, lambdaBeta, rhsExtra = Some(e2))
-    } else {
-      val x = DenseMatrix.tabulate[Double](n, fDim)((r, j) => xs(r)(j))
-      val xtx = x.t * x
-      var j = 0
-      while (j < fDim) { xtx(j, j) += lambdaBeta; j += 1 }
-      val lCh = cholesky(xtx)
-      val xtU = (x.t * target) += e2
-      val beta = DenseMatrix.zeros[Double](fDim, k)
-      var c = 0
-      while (c < k) {
-        val y = lowerSolve(lCh, xtU(::, c))
-        beta(::, c) := upperSolveT(lCh, y)
-        c += 1
-      }
-      beta
-    }
-  }
-
-  /** Each test cell's prediction sum_k prod_m U_m(ids_m, k), from one
-    * factor matrix per mode (`fs`) — for use inside executor closures. */
-  private def predict(fs: Array[Array[Array[Double]]], cells: Posterior.Cells,
-                      k: Int): Array[Double] = {
-    val a = fs.length
-    Array.tabulate(cells.v.length) { c =>
-      var dot = 0.0
-      var j = 0
-      while (j < k) {
-        var p = 1.0
-        var m = 0
-        while (m < a) { p *= fs(m)(cells.ids(c * a + m).toInt)(j); m += 1 }
-        dot += p
-        j += 1
-      }
-      dot
-    }
   }
 }

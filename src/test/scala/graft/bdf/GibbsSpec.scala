@@ -2,6 +2,7 @@ package graft.bdf
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Golden-fixture factorization tests (SURVEY.md §5.4): a rank-2
   * synthetic matrix must be recovered well below the
@@ -137,6 +138,18 @@ class GibbsSpec extends SparkSpec {
     assert(explicit.mode == "broadcast")
   }
 
+  test("the broadcast footprint counts each side table's F x F Gram matrix") {
+    val s = spark
+    import s.implicits._
+    val cells = Seq((0L, 0L, 1.0), (1L, 1L, 2.0)).toDF("row", "col", "v")
+    val side = Seq((0L, Array(1.0, 0.0, 2.0)), (1L, Array(0.0, 3.0, 0.0))).toDF("id", "features")
+    val rd = RelationData(
+      Map("row" -> Entity("row", 2, Some(side)), "col" -> Entity("col", 5)),
+      Seq(Relation("r0", cells, Seq("row", "col"), Seq("row", "col"), "v")))
+    // N (K + F) + F^2 for the side-equipped entity, N K for the other
+    assert(Gibbs.broadcastFootprint(rd, 4) === 2 * (4 + 3) + 3 * 3 + 5 * 4)
+  }
+
   test("multi-relation coupling: a second relation sharing the row entity helps") {
     val s = spark
     import s.implicits._
@@ -261,6 +274,10 @@ class GibbsSpec extends SparkSpec {
     val opts = Gibbs.Options(numLatent = 4, burnin = 3, samples = 3, seed = 42L)
     val b = Gibbs.train(spark, rd, test, opts.copy(distributedFactors = Some(false)))
     val d1 = Gibbs.train(spark, rd, test, opts.copy(distributedFactors = Some(true)))
+    // storageLevel is the cache manager's lookup of an equal plan
+    assert(test.storageLevel === StorageLevel.NONE, "distributed train left the test table cached")
+    for (r <- rd.relations)
+      assert(r.coo.storageLevel === StorageLevel.NONE, s"distributed train left ${r.name} cached")
     val d2 = Gibbs.train(spark, rd, test, opts.copy(distributedFactors = Some(true)))
     assert(b.mode == "broadcast" && d1.mode == "distributed")
     assert(d1.finalRmse < sd, s"distributed rmse ${d1.finalRmse} not < sd $sd")
@@ -495,28 +512,6 @@ class GibbsSpec extends SparkSpec {
     assert(retained(10, 3).size === 3)
   }
 
-  test("distributed CG side solver matches the driver Cholesky path's quality") {
-    val s = spark
-    import s.implicits._
-    val n = 30; val m = 20
-    val cells = for (i <- 0 until n; j <- 0 until m) yield {
-      val g = if (i % 2 == 0) 1.0 else -1.0
-      (i.toLong, j.toLong, g + 0.1 * CbRng.gaussian(23L, 1L, i.toLong, j.toLong))
-    }
-    val df = cells.toDF("row", "col", "v")
-    val side = (0 until n).map(i => (i.toLong, Array(if (i % 2 == 0) 1.0 else -1.0)))
-      .toDF("id", "features")
-    val rd0 = RelationData.fromDF(df, Seq("row", "col"), "v")
-    val rd = rd0.copy(entities = rd0.entities.updated("row",
-      rd0.entities("row").copy(side = Some(side))))
-    val split = Macau.assignToTest(rd, 0.2)
-    val res = Macau.macau(spark, split.train, split.test,
-      Gibbs.Options(numLatent = 4, burnin = 3, samples = 3, alpha = 20.0,
-        seed = 29L, useCgSideSolver = true))
-    val sd = df.select(stddev_pop($"v")).head().getDouble(0)
-    assert(res.finalRmse < sd, s"CG side-info rmse ${res.finalRmse} not < sd $sd")
-  }
-
   test("sampled link precision (lambda_beta) still converges and is observable") {
     val s = spark
     import s.implicits._
@@ -606,17 +601,20 @@ class GibbsSpec extends SparkSpec {
     r.predictions.select("row_id", "pred", "pred_std").collect()
       .map(row => row.getLong(0) -> bits(Seq(row.getDouble(1), row.getDouble(2)))).toMap
 
-  test("sampled alpha is reproducible bit for bit in broadcast mode") {
+  test("sampled alpha is reproducible bit for bit, both modes") {
     val s = spark
     import s.implicits._
     val df = rank2Matrix(25, 20, seed = 9L).toDF("row", "col", "v")
-    val opts = Gibbs.Options(numLatent = 6, burnin = 3, samples = 3, sampleAlpha = true,
-      alpha = 1.0, seed = 19L, distributedFactors = Some(false))
-    val r1 = Macau.fit(spark, df, Seq("row", "col"), "v", opts)
-    val r2 = Macau.fit(spark, df, Seq("row", "col"), "v", opts)
-    assert(bits(r1.rmseHistory) === bits(r2.rmseHistory))
-    assert(bits(r1.sampleRmseHistory) === bits(r2.sampleRmseHistory))
-    assert(factorBits(r1) === factorBits(r2))
+    for (distributed <- Seq(false, true)) {
+      val opts = Gibbs.Options(numLatent = 6, burnin = 3, samples = 3, sampleAlpha = true,
+        alpha = 1.0, seed = 19L, distributedFactors = Some(distributed))
+      val r1 = Macau.fit(spark, df, Seq("row", "col"), "v", opts)
+      val r2 = Macau.fit(spark, df, Seq("row", "col"), "v", opts)
+      assert(bits(r1.rmseHistory) === bits(r2.rmseHistory), s"distributed=$distributed")
+      assert(bits(r1.sampleRmseHistory) === bits(r2.sampleRmseHistory),
+        s"distributed=$distributed")
+      assert(factorBits(r1) === factorBits(r2), s"distributed=$distributed")
+    }
   }
 
   test("both RMSE traces are reproducible bit for bit, both modes") {
