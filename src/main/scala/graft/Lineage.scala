@@ -59,19 +59,24 @@ object Lineage {
     * every plan outside the loop — including the RETURNED frame,
     * which executes after restore — keeps the session's AQE setting.
     *
-    * Thread-safety: session-conf mutation is visible session-wide;
-    * every main (Bench, BenchOne, Verify, PlanDump — all on the one
-    * [[Harness]] session) constructs queries one at a time on one
-    * thread (the documented single-threaded contract).
-    * Concurrent query construction on one session should synchronize
-    * externally or use separate sessions. */
-  def withAqeOff[T](s: org.apache.spark.sql.SparkSession)(body: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val prev = s.conf.get(key)
-    if (prev == "false") body
-    else {
-      s.conf.set(key, "false")
-      try body finally s.conf.set(key, prev)
+    * Thread-safety: session-conf mutation is visible session-wide, so
+    * calls are serialized on one lock (as `Layout.readManifestFiles`
+    * does for its conf override): a second thread waits for the first
+    * body to finish and the setting to be restored, then runs its own
+    * body with AQE off. Without the lock the second thread would find
+    * AQE already off, skip the set, and run the rest of its body with
+    * AQE back on once the first restored it. Plans built elsewhere on
+    * the session while a body runs still see AQE off. */
+  def withAqeOff[T](s: org.apache.spark.sql.SparkSession)(body: => T): T =
+    aqeLock.synchronized {
+      val key = "spark.sql.adaptive.enabled"
+      val prev = s.conf.get(key)
+      if (prev == "false") body
+      else {
+        s.conf.set(key, "false")
+        try body finally s.conf.set(key, prev)
+      }
     }
-  }
+
+  private val aqeLock = new Object
 }

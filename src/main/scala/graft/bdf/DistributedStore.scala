@@ -34,7 +34,8 @@ import scala.collection.mutable
   * reorder if the partitioning changes).
   */
 private[bdf] final class DistributedStore(spark: SparkSession, rd: RelationData, test: DataFrame,
-                                          opts: Gibbs.Options) extends FactorStore {
+                                          opts: Gibbs.Options,
+                                          sideWidth: String => Int) extends FactorStore {
   import spark.implicits._
 
   val mode = "distributed"
@@ -45,7 +46,7 @@ private[bdf] final class DistributedStore(spark: SparkSession, rd: RelationData,
   // the width job also rejects non-finite features: it runs before
   // anything is cached, so a rejected input leaves no cache behind
   private val fDims: Map[String, Int] = rd.entities.collect {
-    case (name, ent @ Entity(_, _, Some(_))) => name -> ent.sideWidth
+    case (name, Entity(_, _, Some(_))) => name -> sideWidth(name)
   }
   private val coos: Seq[(Relation, DataFrame)] = rd.relations.map(r => r -> r.coo.persist())
   private val testCoo = test.persist()

@@ -3,7 +3,7 @@ package graft.bdf
 import breeze.linalg.{cholesky, DenseMatrix, DenseVector}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import scala.collection.mutable
@@ -32,7 +32,8 @@ private[bdf] trait FactorStore {
   * small-data mode by construction, and the link solves there with
   * Cholesky. */
 private[bdf] final class BroadcastStore(spark: SparkSession, rd: RelationData,
-                                        opts: Gibbs.Options) extends FactorStore {
+                                        opts: Gibbs.Options,
+                                        sideWidth: String => Int) extends FactorStore {
   import BroadcastStore.dot
   import Conditional.{lowerSolve, upperSolveT}
 
@@ -53,10 +54,10 @@ private[bdf] final class BroadcastStore(spark: SparkSession, rd: RelationData,
   // are checked for finiteness as they are copied, so that check costs
   // no job (a sparse table's width job checks its values).
   private val sideData: Map[String, Array[Array[Double]]] = rd.entities.collect {
-    case (name, ent @ Entity(_, n, Some(sideDf))) =>
+    case (name, Entity(_, n, Some(sideDf))) =>
       val arr = Array.ofDim[Array[Double]](n)
       if (sideDf.columns.contains("indices")) {
-        val fDim = ent.sideWidth
+        val fDim = sideWidth(name)
         sideDf.select(col("id").cast("long"), col("indices"), col("values"))
           .collect().foreach { r =>
             val dense = new Array[Double](fDim)
@@ -279,12 +280,16 @@ private[bdf] final class BroadcastStore(spark: SparkSession, rd: RelationData,
     }
   }
 
-  def tables(): Map[String, DataFrame] = {
-    import spark.implicits._
+  /** Each table is a local relation of one partition, so an in-session
+    * [[Macau.predict]] join still broadcasts it and [[Macau.saveModel]]
+    * writes it as one file. Both stay bounded: this mode holds at most
+    * [[Gibbs.Options.autoDistributedDoubles]] doubles on the driver
+    * when it is chosen automatically (32M, 256 MB, by default). */
+  def tables(): Map[String, DataFrame] =
     factors.map { case (e, f) =>
-      e -> Gibbs.toArrays(f).zipWithIndex.map { case (u, i) => (i.toLong, u) }.toSeq.toDF("id", "f")
+      val rows = Gibbs.toArrays(f).zipWithIndex.map { case (u, i) => Row(i.toLong, u) }
+      e -> spark.createDataFrame(java.util.Arrays.asList(rows: _*), ModelSchema.factors).coalesce(1)
     }.toMap
-  }
 
   def close(): Unit = {
     index.values.foreach(_.unpersist())

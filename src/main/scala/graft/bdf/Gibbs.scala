@@ -101,7 +101,8 @@ object Gibbs {
       finalRmse: Double,
       /** Final-sample factor tables per entity, (id: long,
         * f: array<double>) — the persistable model artifact
-        * (Macau.saveModel / loadModel / predict). */
+        * (Macau.saveModel / loadModel / predict). In broadcast mode each
+        * is a driver-built table of one partition, saved as one file. */
       factors: Map[String, DataFrame] = Map.empty,
       /** Which execution path ran: "broadcast" or "distributed"
         * (observable outcome of the auto mode switch). */
@@ -145,25 +146,33 @@ object Gibbs {
     * N x K factor matrix per entity plus, where side info is attached,
     * the densified N x F side matrix and its F x F Gram matrix (sparse
     * side features count at their dense width — that is what the
-    * broadcast mode materializes). */
-  private[bdf] def broadcastFootprint(rd: RelationData, k: Int): Long =
-    rd.entities.valuesIterator.map { ent =>
-      val f = ent.sideWidth.toLong
+    * broadcast mode materializes). `sideWidth` gives an entity's F. */
+  private[bdf] def broadcastFootprint(rd: RelationData, k: Int,
+                                      sideWidth: String => Int): Long =
+    rd.entities.iterator.map { case (e, ent) =>
+      val f = sideWidth(e).toLong
       ent.numItems.toLong * (k + f) + f * f
     }.sum
+
+  private[bdf] def broadcastFootprint(rd: RelationData, k: Int): Long =
+    broadcastFootprint(rd, k, rd.entities(_).sideWidth)
 
   def train(spark: SparkSession, rd: RelationData, test: DataFrame,
             opts: Options): Result = {
     require(!(opts.binaryProbit && opts.sampleAlpha),
       "binaryProbit fixes alpha = 1; disable sampleAlpha")
     rd.validate()
+    // each side table's width job (which also rejects non-finite
+    // features) runs at most once per train, whoever asks first
+    val widths = mutable.Map[String, Int]()
+    val sideWidth = (e: String) => widths.getOrElseUpdate(e, rd.entities(e).sideWidth)
     // auto mode switch: an explicit flag wins; otherwise route by the
     // broadcast mode's would-be driver footprint
     val store: FactorStore =
       if (opts.distributedFactors.getOrElse(
-            broadcastFootprint(rd, opts.numLatent) > opts.autoDistributedDoubles))
-        new DistributedStore(spark, rd, test, opts)
-      else new BroadcastStore(spark, rd, opts)
+            broadcastFootprint(rd, opts.numLatent, sideWidth) > opts.autoDistributedDoubles))
+        new DistributedStore(spark, rd, test, opts, sideWidth)
+      else new BroadcastStore(spark, rd, opts, sideWidth)
     try {
       val entNames = rd.entities.keys.toSeq.sorted
       val posterior = new Posterior(test, rd.relations.head.modeEntities.length, opts)

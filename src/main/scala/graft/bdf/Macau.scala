@@ -2,6 +2,7 @@ package graft.bdf
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** User-facing API mirroring the reference's entry points:
   * `RelationData(df)` -> [[RelationData.fromDF]], `assignToTest!` ->
@@ -92,33 +93,60 @@ object Macau {
     * (`__moments/`: row_id, ids, v, n_samples, pred_sum, pred_sq_sum)
     * — so a loaded model answers uncertainty queries (posterior std,
     * credible-shaped) and not just point predictions. Distributed
-    * writes — nothing passes through the driver. */
+    * writes — nothing passes through the driver.
+    *
+    * The tables are written at the same time, one new thread per table
+    * (3 tables, or 4 with a sample trace). Each thread is created here,
+    * so its jobs carry the caller's local properties (job group,
+    * description, scheduler pool) and run in the caller's session. Every
+    * write runs to its end even when another one fails; the first failure
+    * in table order is then rethrown, with the others attached as
+    * suppressed exceptions. A broadcast-mode factor table is one
+    * partition (see [[Gibbs.Result.factors]]), so it is written as one
+    * part file. */
   def saveModel(path: String, res: Gibbs.Result): Unit = {
-    res.factors.foreach { case (e, df) =>
-      df.write.mode("overwrite").parquet(s"$path/$e")
+    // the thinned posterior sample trace (Options.keepSamples > 0) lets
+    // the LOADED model answer empirical order-stat credible bounds, not
+    // just the moments' normal approximation
+    val tables = res.factors.toSeq.map { case (e, df) => s"$path/$e" -> df } ++
+      res.predMoments.map(s"$path/__moments" -> _) ++
+      res.samplePreds.map(s"$path/__samples" -> _)
+    val failures = new Array[Throwable](tables.length)
+    val writers = tables.zipWithIndex.map { case ((dir, df), i) =>
+      val t = new Thread(() =>
+        try df.write.mode("overwrite").parquet(dir)
+        catch { case e: Throwable => failures(i) = e }, s"saveModel $dir")
+      t.start()
+      t
     }
-    res.predMoments.foreach(
-      _.write.mode("overwrite").parquet(s"$path/__moments"))
-    // thinned posterior sample trace (Options.keepSamples > 0): lets
-    // the LOADED model answer empirical order-stat credible bounds,
-    // not just the moments' normal approximation
-    res.samplePreds.foreach(
-      _.write.mode("overwrite").parquet(s"$path/__samples"))
+    writers.foreach(_.join())
+    failures.filter(_ != null) match {
+      case Array(first, rest @ _*) =>
+        rest.foreach(first.addSuppressed)
+        throw first
+      case _ =>
+    }
   }
 
-  /** Load factor tables written by [[saveModel]]. */
+  /** Load factor tables written by [[saveModel]]. Read with their
+    * declared schema, so loading runs no Spark job (no parquet schema
+    * inference); the caller's own query is the first. Saves made before
+    * the schema was declared hold the same parquet types and load
+    * unchanged. */
   def loadModel(spark: SparkSession, path: String,
                 entities: Seq[String]): Map[String, DataFrame] =
-    entities.map(e => e -> spark.read.parquet(s"$path/$e")).toMap
+    entities.map(e => e -> spark.read.schema(ModelSchema.factors).parquet(s"$path/$e")).toMap
 
-  /** Load the posterior moments table written by [[saveModel]]. */
+  /** Load the posterior moments table written by [[saveModel]], with its
+    * declared schema and no Spark job, as [[loadModel]] does. */
   def loadMoments(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/__moments")
+    spark.read.schema(ModelSchema.moments).parquet(s"$path/__moments")
 
   /** Load the thinned posterior sample trace written by [[saveModel]]
-    * (present iff the run used Options.keepSamples > 0). */
+    * (present iff the run used Options.keepSamples > 0), with its
+    * declared schema and no Spark job, as [[loadModel]] does. */
   def loadSamples(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/__samples")
+    spark.read.schema(ModelSchema.samples).parquet(s"$path/__samples")
 
   /** EMPIRICAL credible bounds from a retained sample trace
     * ([[Gibbs.Result.samplePreds]] or [[loadSamples]]): per test cell,
@@ -237,4 +265,25 @@ object Macau {
     df.withColumn("pred", expr("aggregate(z, 0D, (acc, x) -> acc + x)"))
       .drop("z")
   }
+}
+
+/** The one declared schema of each table a model is made of, used where
+  * the table is built ([[BroadcastStore]]'s factor tables, [[Posterior]]'s
+  * result tables) and where [[Macau]] loads it back. A saved table's
+  * parquet types follow from these. */
+private[bdf] object ModelSchema {
+  val factors = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("f", ArrayType(DoubleType, containsNull = false))))
+  val moments = StructType(Seq(
+    StructField("row_id", LongType, nullable = false),
+    StructField("ids", ArrayType(LongType, containsNull = false)),
+    StructField("v", DoubleType, nullable = false),
+    StructField("n_samples", IntegerType, nullable = false),
+    StructField("pred_sum", DoubleType, nullable = false),
+    StructField("pred_sq_sum", DoubleType, nullable = false)))
+  val samples = StructType(Seq(
+    StructField("row_id", LongType, nullable = false),
+    StructField("sample_idx", IntegerType, nullable = false),
+    StructField("pred", DoubleType, nullable = false)))
 }

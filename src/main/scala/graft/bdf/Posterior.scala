@@ -2,7 +2,7 @@ package graft.bdf
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
@@ -114,8 +114,8 @@ private[bdf] final class Posterior(testCoo: DataFrame, arity: Int, opts: Gibbs.O
     spark.createDataFrame(index.zipPartitions(state) { (cs, ms) =>
       val c = cs.next(); val m = ms.next()
       Iterator.tabulate(c.rowIds.length)(i =>
-        (c.rowIds(i), c.ids.slice(i * a, i * a + a), c.v(i), n, m.sum(i), m.sq(i)))
-    }).toDF("row_id", "ids", "v", "n_samples", "pred_sum", "pred_sq_sum")
+        Row(c.rowIds(i), c.ids.slice(i * a, i * a + a), c.v(i), n, m.sum(i), m.sq(i)))
+    }, ModelSchema.moments)
   }
 
   /** The retained samples' predictions, one (row_id, sample_idx, pred)
@@ -124,9 +124,9 @@ private[bdf] final class Posterior(testCoo: DataFrame, arity: Int, opts: Gibbs.O
     spark.createDataFrame(spark.sparkContext.union(kept.toSeq.map { case (sIdx, s) =>
       index.zipPartitions(s) { (cs, ms) =>
         val c = cs.next(); val m = ms.next()
-        Iterator.tabulate(c.rowIds.length)(i => (c.rowIds(i), sIdx, m.pred(i)))
+        Iterator.tabulate(c.rowIds.length)(i => Row(c.rowIds(i), sIdx, m.pred(i)))
       }
-    })).toDF("row_id", "sample_idx", "pred")
+    }), ModelSchema.samples)
 
   /** The run's [[Gibbs.Result]]: these posterior summaries plus each
     * mode's final-sample state. The predictions are the saved model's

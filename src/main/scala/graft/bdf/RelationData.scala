@@ -25,7 +25,8 @@ final case class Entity(
 
   /** Feature width F of the side table — max(indices)+1 for sparse
     * rows, size(features) for dense ones, 0 without side info — in one
-    * aggregate query that also rejects a non-finite feature. */
+    * aggregate query that also rejects a non-finite feature. Each call
+    * runs that query again; [[Gibbs.train]] asks once per entity. */
   def sideWidth: Int = side.fold(0) { df =>
     val sparse = df.columns.contains("indices")
     val xs = if (sparse) "values" else "features"

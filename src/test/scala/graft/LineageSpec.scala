@@ -28,4 +28,36 @@ class LineageSpec extends SparkSpec {
     assert(df.orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
       .toSeq == Seq((1L, 45L), (2L, 55L)))
   }
+
+  test("withAqeOff from two threads: each body runs with AQE off, and AQE comes back on") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val key = "spark.sql.adaptive.enabled"
+    assert(spark.conf.get(key) === "true")
+    val firstInside, secondCalling, firstDone = new CountDownLatch(1)
+    @volatile var seenFirst, seenSecond = ""
+    val first = new Thread(() => {
+      Lineage.withAqeOff(spark) {
+        firstInside.countDown()
+        secondCalling.await(10, TimeUnit.SECONDS)
+        Thread.sleep(200) // lets the second thread reach withAqeOff
+        seenFirst = spark.conf.get(key)
+      }
+      firstDone.countDown()
+    })
+    val second = new Thread(() => {
+      secondCalling.countDown()
+      Lineage.withAqeOff(spark) {
+        // read only once the first call has restored the setting
+        firstDone.await(10, TimeUnit.SECONDS)
+        seenSecond = spark.conf.get(key)
+      }
+    })
+    first.start()
+    assert(firstInside.await(10, TimeUnit.SECONDS))
+    second.start()
+    first.join(20000); second.join(20000)
+    assert(seenFirst === "false")
+    assert(seenSecond === "false", "the second body ran with AQE on")
+    assert(spark.conf.get(key) === "true")
+  }
 }

@@ -673,26 +673,45 @@ class GibbsSpec extends SparkSpec {
     } finally spark.conf.set(key, prev)
   }
 
-  /** Spark jobs started and shuffle bytes written while `run` runs. */
-  private def jobsAndShuffleBytes(run: => Unit): (Int, Long) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** The job group ("" outside one) of every Spark job started while `run`
+    * runs, in start order, and the shuffle bytes written. A marker job
+    * runs first: the listener bus delivers events in order, so once the
+    * marker's start arrives no earlier job's event is still queued. */
+  private def jobsRun(run: => Unit): (Seq[String], Long) = {
+    val sc = spark.sparkContext
+    val marker = s"jobs-run-marker-${System.nanoTime()}"
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val bytes = new java.util.concurrent.atomic.AtomicLong(0)
+    @volatile var counting = false
     val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val group = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("")
+        if (counting) groups.add(group) else if (group == marker) counting = true
+      }
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) bytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
+        if (counting && e.taskMetrics != null)
+          bytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
     }
-    spark.sparkContext.addSparkListener(listener)
+    sc.addSparkListener(listener)
     try {
+      sc.setJobGroup(marker, "marker", interruptOnCancel = false)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      while (!counting) Thread.sleep(20)
       run
       // the listener bus is asynchronous: wait until both counts settle
       var prev = (-1, -1L)
-      while ((jobs.get(), bytes.get()) != prev) {
-        prev = (jobs.get(), bytes.get()); Thread.sleep(200)
+      while ((groups.size, bytes.get()) != prev) {
+        prev = (groups.size, bytes.get()); Thread.sleep(200)
       }
-      prev
-    } finally spark.sparkContext.removeSparkListener(listener)
+      (groups.toArray(Array.empty[String]).toSeq, prev._2)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Spark jobs started and shuffle bytes written while `run` runs. */
+  private def jobsAndShuffleBytes(run: => Unit): (Int, Long) = {
+    val (groups, bytes) = jobsRun(run)
+    (groups.size, bytes)
   }
 
   test("broadcast sweeps after the one-time index build shuffle nothing") {
@@ -756,5 +775,92 @@ class GibbsSpec extends SparkSpec {
       assert(math.abs(res.finalRmse - math.sqrt(mse)) <= 1e-12 * res.finalRmse,
         s"rmse ${res.finalRmse} vs ${math.sqrt(mse)}, $mode")
     }
+  }
+
+  /** A broadcast-mode model with a sample trace: two factor tables,
+    * `__moments` and `__samples`. */
+  private def keepSamplesModel(): Gibbs.Result = {
+    val s = spark
+    import s.implicits._
+    Macau.fit(spark, rank2Matrix(20, 15, seed = 3L).toDF("row", "col", "v"), Seq("row", "col"), "v",
+      Gibbs.Options(numLatent = 3, burnin = 1, samples = 2, alpha = 20.0, seed = 71L,
+        keepSamples = 2))
+  }
+
+  test("a saved model loads without a Spark job") {
+    val res = keepSamplesModel()
+    val dir = java.nio.file.Files.createTempDirectory("macau-load").toString
+    Macau.saveModel(dir, res)
+    var factors = Map.empty[String, org.apache.spark.sql.DataFrame]
+    var moments, samples: org.apache.spark.sql.DataFrame = null
+    val (jobs, _) = jobsAndShuffleBytes {
+      factors = Macau.loadModel(spark, dir, Seq("row", "col"))
+      moments = Macau.loadMoments(spark, dir)
+      samples = Macau.loadSamples(spark, dir)
+    }
+    assert(jobs === 0, "loading ran Spark jobs")
+    def types(t: org.apache.spark.sql.DataFrame) =
+      t.schema.map(f => f.name -> f.dataType.catalogString)
+    for (e <- Seq("row", "col")) assert(types(factors(e)) === types(res.factors(e)), e)
+    assert(types(moments) === types(res.predMoments.get))
+    assert(types(samples) === types(res.samplePreds.get))
+  }
+
+  test("saveModel writes every table in the caller's job group") {
+    val res = keepSamplesModel()
+    val dir = java.nio.file.Files.createTempDirectory("macau-group").toString
+    val sc = spark.sparkContext
+    val (groups, _) = jobsRun {
+      sc.setJobGroup("macau-save", "save a model", interruptOnCancel = false)
+      try Macau.saveModel(dir, res) finally sc.clearJobGroup()
+    }
+    // one job per table: row, col, __moments, __samples
+    assert(groups === Seq.fill(4)("macau-save"))
+    for (e <- Seq("row", "col")) {
+      val parts = new java.io.File(s"$dir/$e").list().filter(_.startsWith("part-"))
+      assert(parts.length === 1, s"$e: ${parts.mkString(", ")}")
+    }
+  }
+
+  test("a failed table write surfaces after the other writes end") {
+    val res = keepSamplesModel()
+    val dir = java.nio.file.Files.createTempDirectory("macau-fail").toString
+    // fails at execution time, in the write's tasks
+    val bad = res.factors("row").select(col("id"),
+      when(col("id") >= 0, raise_error(lit("planted write failure"))).otherwise(col("f")).as("f"))
+    val e = intercept[Exception](Macau.saveModel(dir, res.copy(factors = res.factors + ("bad" -> bad))))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("planted write failure")), messages.mkString("\n"))
+    for (t <- Seq("row", "col", "__moments", "__samples"))
+      assert(new java.io.File(s"$dir/$t/_SUCCESS").exists(), s"$t was not written")
+  }
+
+  test("auto mode runs as many jobs as the explicit mode it routes to") {
+    val s = spark
+    import s.implicits._
+    val df = rank2Matrix(20, 15, seed = 3L).toDF("row", "col", "v")
+    val sparse = (0 until 20).map(i => (i.toLong, Seq(i % 2), Seq(1.0))).toDF("id", "indices", "values")
+    val dense = (0 until 20).map(i => (i.toLong, Array(if (i % 2 == 0) 1.0 else -1.0)))
+      .toDF("id", "features")
+    val base = Gibbs.Options(numLatent = 3, burnin = 1, samples = 1, alpha = 20.0, seed = 5L)
+    // footprints: sparse 20 (3 + 2) + 2^2 + 15 x 3 = 149, under the default
+    // threshold; dense 20 (3 + 1) + 1 + 15 x 3 = 126, over 100
+    val cases = Seq((sparse, "broadcast", base),
+                    (dense, "distributed", base.copy(autoDistributedDoubles = 100L)))
+    // (mode, jobs) of the explicit train, then of the auto one, per case
+    val runs = cases.map { case (side, routed, opts) =>
+      val rd0 = RelationData.fromDF(df, Seq("row", "col"), "v")
+      val split = Macau.assignToTest(rd0.copy(entities = rd0.entities.updated("row",
+        rd0.entities("row").copy(side = Some(side)))), 0.2)
+      def modeAndJobs(o: Gibbs.Options): (String, Int) = {
+        var mode = ""
+        val (jobs, _) = jobsAndShuffleBytes { mode = Gibbs.train(spark, split.train, split.test, o).mode }
+        (mode, jobs)
+      }
+      (modeAndJobs(opts.copy(distributedFactors = Some(routed == "distributed"))), modeAndJobs(opts))
+    }
+    assert(runs.map(_._1._1) === cases.map(_._2))
+    assert(runs.map(_._2) === runs.map(_._1), "auto mode vs the explicit mode it routes to")
   }
 }
