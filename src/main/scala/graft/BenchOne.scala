@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import Harness.{jstr, loadavg}
 
 /** Named-query isolation bench — the one-command repro for bench-delta
@@ -23,9 +21,8 @@ import Harness.{jstr, loadavg}
   *  - `jobs`, the Spark jobs each rep issued (round-18 finding: one
   *    q_graph_communities_converged serve issued 65 jobs at sf0.1,
   *    mostly AQE stage materializations — the loop family's cost is
-  *    job latency, not data). Counted by a SparkListener; the listener
-  *    bus is asynchronous, so each rep waits 300 ms untimed on both
-  *    sides before reading — counts are for triage, not a contract;
+  *    job latency, not data), counted exactly by [[JobCount]], whose
+  *    two marker jobs run outside the timed window;
   *  - loadavg and the par-membw canary before and after the reps. The
   *    canary pair is the arbitration precondition (the r16→r17 lesson:
   *    read it FIRST — a 43 s vs flat ~13 s pair means the host is
@@ -40,11 +37,6 @@ object BenchOne {
     val queries = Harness.resolve(names).fold(Harness.usage, identity)
 
     val spark = Harness.session()
-    val jobs = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    })
     def jarr(xs: Seq[Any]): String = xs.mkString("[", ",", "]")
     var membwPar = Bench.membwParCanary()
     try for (dir <- dirs) {
@@ -52,15 +44,13 @@ object BenchOne {
       for ((name, fn) <- queries) {
         val loadStart = loadavg()
         val runs = (1 to reps).map { _ =>
-          Thread.sleep(300)
-          val j0 = jobs.get()
-          val t0 = System.nanoTime()
-          val rows = fn(spark, dir).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(300)
-          val dj = jobs.get() - j0
+          val rep = JobCount(spark.sparkContext) {
+            val t0 = System.nanoTime()
+            val rows = fn(spark, dir).count()
+            ((System.nanoTime() - t0) / 1e9, rows)
+          }
           Harness.sweep(spark)
-          (dt, rows, dj)
+          (rep.value._1, rep.value._2, rep.jobs)
         }
         val membwParEnd = Bench.membwParCanary()
         val loadEnd = loadavg()

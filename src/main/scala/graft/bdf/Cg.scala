@@ -1,7 +1,6 @@
 package graft.bdf
 
 import breeze.linalg.{DenseMatrix, DenseVector}
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -9,26 +8,26 @@ import org.apache.spark.sql.functions.col
   * link (arXiv:1509.04610 §3.2): solve (X^T X + lambda I) beta = rhs
   * WITHOUT materializing X^T X — each CG iteration runs one distributed
   * pass over the row-partitioned feature matrix computing
-  * X^T (X p) + lambda p via treeAggregate. This is the scale path for
+  * X^T (X p) + lambda p, summed through [[DetSum]]. This is the scale path for
   * side-info matrices whose Gram matrix (F x F) or row count make the
   * driver-side Cholesky in BroadcastStore.drawLink infeasible; the per-pass
   * cost is O(nnz(X) * K) and the driver only ever holds F x K state.
   *
-  * Rows may be DENSE (features: array<double>) or SPARSE
-  * (indices: array<int> ascending + values: array<double>) — the
-  * reference's side matrices (e.g. ChEMBL compound fingerprints,
-  * F ~ 10^5) are sparse binary, where a dense row would be ~800 KB;
-  * the sparse path costs O(nnz) per row. Because zero terms contribute
-  * exactly 0.0 to every accumulation, the sparse and dense paths
-  * produce bit-identical iterates for the same partitioning. */
+  * X arrives in [[SideTable]]'s row form, each row DENSE (indices
+  * null, values the whole row) or SPARSE (indices strictly ascending,
+  * values the nonzeros) — the reference's side matrices (e.g. ChEMBL
+  * compound fingerprints, F ~ 10^5) are sparse binary, where a dense
+  * row would be ~800 KB; a sparse row costs O(nnz). Because zero terms
+  * contribute exactly 0.0 to every accumulation, sparse and dense rows
+  * of the same X produce bit-identical iterates for the same
+  * partitioning. */
 object Cg {
 
-  /** One row of X zipped with its target row: (indices-or-null, values,
-    * target K). indices == null means dense. */
-  type XRow = (Array[Int], Array[Double], Array[Double])
-
   /** Solve (X^T X + lambda I) beta = X^T T + rhsExtra for all K columns
-    * at once, dense rows (features, target).
+    * at once.
+    * @param xt one row of X per row, zipped with its target row:
+    *           (indices: array<int>, null for a dense row,
+    *           values: array<double>, target: array<double>)
     * @param rhsExtra optional F x K term added to the right-hand side
     *                 (the Macau draw's sqrt(lambda)-scaled prior noise)
     * @return beta (F x K) */
@@ -36,31 +35,10 @@ object Cg {
                   lambda: Double, maxIter: Int = 30,
                   tol: Double = 1e-9,
                   rhsExtra: Option[DenseMatrix[Double]] = None): DenseMatrix[Double] = {
-    import spark.implicits._
-    val rows = xt.select(col("features"), col("target"))
-      .as[(Seq[Double], Seq[Double])]
-      .rdd.map { case (f, t) => (null: Array[Int], f.toArray, t.toArray) }
-    solveRows(spark, rows, fDim, k, lambda, maxIter, tol, rhsExtra)
-  }
-
-  /** Sparse-row variant: xt has (indices: array<int>, values:
-    * array<double>, target: array<double>), indices strictly ascending
-    * per row. */
-  def solveNormalSparse(spark: SparkSession, xt: DataFrame, fDim: Int, k: Int,
-                        lambda: Double, maxIter: Int = 30,
-                        tol: Double = 1e-9,
-                        rhsExtra: Option[DenseMatrix[Double]] = None): DenseMatrix[Double] = {
-    import spark.implicits._
-    val rows = xt.select(col("indices"), col("values"), col("target"))
-      .as[(Seq[Int], Seq[Double], Seq[Double])]
-      .rdd.map { case (ix, v, t) => (ix.toArray, v.toArray, t.toArray) }
-    solveRows(spark, rows, fDim, k, lambda, maxIter, tol, rhsExtra)
-  }
-
-  private def solveRows(spark: SparkSession, rows0: RDD[XRow], fDim: Int, k: Int,
-                        lambda: Double, maxIter: Int, tol: Double,
-                        rhsExtra: Option[DenseMatrix[Double]]): DenseMatrix[Double] = {
-    val rows = rows0.persist()
+    val rows = xt.select(col("indices"), col("values"), col("target")).rdd.map { r =>
+      (if (r.isNullAt(0)) null else r.getSeq[Int](0).toArray,
+       r.getSeq[Double](1).toArray, r.getSeq[Double](2).toArray)
+    }.persist()
 
     // rhs = X^T T, one distributed pass (DetSum: bit-deterministic for
     // a fixed partitioning, unlike treeAggregate's arrival-order merge)

@@ -43,7 +43,7 @@ private[bdf] final class DistributedStore(spark: SparkSession, rd: RelationData,
   private val seed = opts.seed
   private val rel0 = rd.relations.head
 
-  // the width job also rejects non-finite features: it runs before
+  // the width job also runs every side-row check: it runs before
   // anything is cached, so a rejected input leaves no cache behind
   private val fDims: Map[String, Int] = rd.entities.collect {
     case (name, Entity(_, _, Some(_))) => name -> sideWidth(name)
@@ -62,17 +62,14 @@ private[bdf] final class DistributedStore(spark: SparkSession, rd: RelationData,
     }.toDF("id", "f").localCheckpoint(true)
   }: _*)
 
-  // side-info tables stay distributed; only beta (F x K) and the NW
-  // state live on the driver — the Macau link solve runs through the
-  // distributed CG (Cg.solveNormal), so neither X nor X^T X ever
-  // materializes in one place. A side table with (indices, values)
-  // columns is treated as sparse CSR rows (the reference's fingerprint
-  // matrices, F ~ 1e5 with ~100 nnz/row — dense rows would be 800 KB).
+  // side-info tables stay distributed, in SideTable's row form; only
+  // beta (F x K) and the NW state live on the driver — the Macau link
+  // solve runs through the distributed CG (Cg.solveNormal), so neither
+  // X nor X^T X ever materializes in one place, and a sparse row (the
+  // reference's fingerprint matrices, F ~ 1e5 with ~100 nnz/row) costs
+  // its nonzeros only
   private val sideDFs: Map[String, DataFrame] = rd.entities.collect {
-    case (name, Entity(_, _, Some(sd))) =>
-      name -> (if (sd.columns.contains("indices"))
-                 sd.select(col("id").cast("long").as("id"), col("indices"), col("values"))
-               else sd.select(col("id").cast("long").as("id"), col("features"))).persist()
+    case (name, Entity(_, _, Some(sd))) => name -> SideTable.rows(sd).persist()
   }
   // (id, shift = beta^T x_i), refreshed each sweep
   private val linkShift = mutable.Map[String, DataFrame]()
@@ -164,16 +161,11 @@ private[bdf] final class DistributedStore(spark: SparkSession, rd: RelationData,
       e2(fi, ::) := (Conditional.upperSolveT(lLam, eps) * sqLb).t
       fi += 1
     }
-    val sparse = sd.columns.contains("indices")
-    val xt = sd.join(target, "id")
-    val beta =
-      if (sparse) Cg.solveNormalSparse(spark, xt, fD, kk, lambdaBeta, rhsExtra = Some(e2))
-      else Cg.solveNormal(spark, xt, fD, kk, lambdaBeta, rhsExtra = Some(e2))
+    val beta = Cg.solveNormal(spark, sd.join(target, "id"), fD, kk, lambdaBeta, rhsExtra = Some(e2))
     val bBeta = spark.sparkContext.broadcast(beta.toArray) // column-major F x K
-    // each side row as (indices or null, values), as Cg reads it
     linkShift(e) = sd.map { r =>
-      val ix = if (sparse) r.getSeq[Int](1) else null
-      val v = r.getSeq[Double](if (sparse) 2 else 1)
+      val ix = if (r.isNullAt(1)) null else r.getSeq[Int](1)
+      val v = r.getSeq[Double](2)
       val shift = new Array[Double](kk)
       var j = 0
       while (j < kk) {

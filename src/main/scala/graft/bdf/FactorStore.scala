@@ -4,7 +4,6 @@ import breeze.linalg.{cholesky, DenseMatrix, DenseVector}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.col
 
 import scala.collection.mutable
 
@@ -28,9 +27,9 @@ private[bdf] trait FactorStore {
   * once into persisted per-partition CSR blocks ([[CellIndex]], the
   * IndexedDF analog; its one shuffle runs in the first sweep), so each
   * draw is one narrow job over that index, shuffling nothing. Side
-  * tables are collected and densified on the driver: this is the
-  * small-data mode by construction, and the link solves there with
-  * Cholesky. */
+  * tables are collected and densified on the driver once per train:
+  * this is the small-data mode by construction, and the link solves
+  * there with Cholesky. */
 private[bdf] final class BroadcastStore(spark: SparkSession, rd: RelationData,
                                         opts: Gibbs.Options,
                                         sideWidth: String => Int) extends FactorStore {
@@ -50,41 +49,12 @@ private[bdf] final class BroadcastStore(spark: SparkSession, rd: RelationData,
       0.3 * CbRng.gaussian(opts.seed, -1L, e.hashCode.toLong, i.toLong, j.toLong))
   }: _*)
 
-  // A sparse (indices, values) side table is densified. Dense features
-  // are checked for finiteness as they are copied, so that check costs
-  // no job (a sparse table's width job checks its values).
-  private val sideData: Map[String, Array[Array[Double]]] = rd.entities.collect {
-    case (name, Entity(_, n, Some(sideDf))) =>
-      val arr = Array.ofDim[Array[Double]](n)
-      if (sideDf.columns.contains("indices")) {
-        val fDim = sideWidth(name)
-        sideDf.select(col("id").cast("long"), col("indices"), col("values"))
-          .collect().foreach { r =>
-            val dense = new Array[Double](fDim)
-            val ix = r.getSeq[Int](1); val v = r.getSeq[Double](2)
-            var q = 0
-            while (q < ix.length) { dense(ix(q)) = v(q); q += 1 }
-            arr(r.getLong(0).toInt) = dense
-          }
-      } else {
-        sideDf.select(col("id").cast("long"), col("features")).collect().foreach { r =>
-          val xs = r.getSeq[Double](1)
-          require(xs.forall(x => java.lang.Double.isFinite(x)),
-            s"entity $name side table: non-finite value in column features at row " +
-              s"(id=${r.getLong(0)}, features=${xs.mkString("[", ",", "]")})")
-          arr(r.getLong(0).toInt) = xs.toArray
-        }
-      }
-      // ids absent from the side table (legal: a sparse COO source
-      // omits all-zero rows) get an all-zero feature row — never null
-      val fDim0 = arr.collectFirst { case a if a != null => a.length }
-      require(fDim0.isDefined, s"side table for entity $name is empty")
-      var i0 = 0
-      while (i0 < n) {
-        if (arr(i0) == null) arr(i0) = new Array[Double](fDim0.get)
-        i0 += 1
-      }
-      name -> arr
+  // X (N x F) and its Gram matrix X^T X, built once per train; ids
+  // absent from a side table have an all-zero row
+  private val sides: Map[String, (DenseMatrix[Double], DenseMatrix[Double])] = rd.entities.collect {
+    case (name, ent @ Entity(_, _, Some(sideDf))) =>
+      val x = SideTable.matrix(ent.sideSpec(sideDf), sideDf, sideWidth(name))
+      name -> (x, x.t * x)
   }
   private val linkMeans = mutable.Map[String, DenseMatrix[Double]]() // beta^T x_i per item
 
@@ -124,11 +94,11 @@ private[bdf] final class BroadcastStore(spark: SparkSession, rd: RelationData,
     *
     * where U~ = U - mu and each row of E1 (n x K) and E2 (F x K) is an
     * independent N(0, Lambda^-1) draw, realized as L_Lambda^-T eps.
-    * X solves on the driver with Cholesky; its F x F Gram matrix is part
-    * of [[Gibbs.broadcastFootprint]]. */
+    * X solves on the driver with Cholesky; X and its F x F Gram matrix
+    * are part of [[Gibbs.broadcastFootprint]]. */
   def drawLink(e: String, nw: Gibbs.NW, lambdaBeta: Double, iter: Int): DenseMatrix[Double] = {
-    val u = factors(e); val xs = sideData(e)
-    val n = u.rows; val fDim = xs(0).length
+    val u = factors(e); val (x, gram) = sides(e)
+    val n = u.rows; val fDim = x.cols
     val rng = new RngStream(opts.seed, (iter.toLong << 24) ^ e.hashCode ^ 0x5ea1L)
     val lLam = cholesky((nw.lambda + nw.lambda.t) * 0.5)
     def lamNoiseRow(): DenseVector[Double] = {
@@ -152,8 +122,7 @@ private[bdf] final class BroadcastStore(spark: SparkSession, rd: RelationData,
       e2(i, ::) := (lamNoiseRow() * sqLb).t
       i += 1
     }
-    val x = DenseMatrix.tabulate[Double](n, fDim)((r, j) => xs(r)(j))
-    val xtx = x.t * x
+    val xtx = gram.copy
     var j = 0
     while (j < fDim) { xtx(j, j) += lambdaBeta; j += 1 }
     val lCh = cholesky(xtx)
@@ -168,7 +137,7 @@ private[bdf] final class BroadcastStore(spark: SparkSession, rd: RelationData,
     val lm = DenseMatrix.zeros[Double](n, k)
     i = 0
     while (i < n) {
-      lm(i, ::) := (beta.t * DenseVector(xs(i))).t
+      lm(i, ::) := (beta.t * x(i, ::).t.copy).t
       i += 1
     }
     linkMeans(e) = lm

@@ -162,8 +162,8 @@ object Gibbs {
     require(!(opts.binaryProbit && opts.sampleAlpha),
       "binaryProbit fixes alpha = 1; disable sampleAlpha")
     rd.validate()
-    // each side table's width job (which also rejects non-finite
-    // features) runs at most once per train, whoever asks first
+    // each side table's width job (which also runs every side-row
+    // check) runs at most once per train, whoever asks first
     val widths = mutable.Map[String, Int]()
     val sideWidth = (e: String) => widths.getOrElseUpdate(e, rd.entities(e).sideWidth)
     // auto mode switch: an explicit flag wins; otherwise route by the

@@ -74,7 +74,9 @@ object Macau {
     * matrix (row=entity id, col=feature index, v=weight) — the shape
     * MatrixMarket.read produces for the reference's sparse feature
     * files. Output: (id, indices asc, values), directly attachable as
-    * Entity.side and consumed sparsely by the distributed CG. */
+    * Entity.side or given to [[coldStartFactors]]; both execution modes
+    * read it through [[SideTable]], and a COO cell given twice becomes a
+    * repeated index, which they reject. */
   def sideFromCoo(coo: DataFrame, rowCol: String = "row",
                   colCol: String = "col", valueCol: String = "v"): DataFrame =
     coo.select(col(rowCol).cast("long").as("id"),
@@ -198,12 +200,17 @@ object Macau {
 
   /** COLD START (Macau §3.2's main payoff): factor rows for entities
     * NEVER observed in training, from side features alone — the prior
-    * mean u_new = mu + beta^T x with the trained link matrix. Returns
-    * the same (id, f) shape as [[Gibbs.Result.factors]], so it composes
-    * directly with [[predict]]: swap the cold table in for the entity's
-    * factor table and score any (new, old) cell. beta (F x K) and mu
-    * are tiny driver state broadcast once; the map over `xNew` is one
-    * narrow pass at any scale. */
+    * mean u_new = mu + beta^T x with the trained link matrix. `xNew`
+    * takes either shape of [[Entity.side]], whatever shape the model
+    * was trained on; its rows pass the same checks, except that ids
+    * may be any non-null value, and a dense row may be shorter than the
+    * trained F (its missing features are zero) but an entry at F or
+    * beyond is rejected. Returns the same (id, f) shape as
+    * [[Gibbs.Result.factors]], so it composes directly with [[predict]]:
+    * swap the cold table in for the entity's factor table and score
+    * any (new, old) cell. beta (F x K) and mu are tiny driver state
+    * broadcast once; the map over `xNew` is one narrow pass at any
+    * scale. */
   def coldStartFactors(spark: SparkSession, res: Gibbs.Result,
                        entity: String, xNew: DataFrame): DataFrame = {
     val beta = res.links.getOrElse(entity, Array.empty[Array[Double]])
@@ -220,29 +227,28 @@ object Macau {
                                xNew: DataFrame): DataFrame = {
     import spark.implicits._
     require(beta.nonEmpty, "empty link matrix")
-    val ff = beta.length
+    val spec = SideTable.spec("cold-start side table", xNew, None, maxWidth = beta.length)
     val bBeta = spark.sparkContext.broadcast(beta)
     val bMu = spark.sparkContext.broadcast(mu)
     val kk = mu.length
-    xNew.select(col("id").cast("long"), col("features"))
-      .as[(Long, Seq[Double])]
-      .map { case (id, x) =>
-        val b = bBeta.value
-        require(x.length <= ff,
-          s"feature vector for id=$id has ${x.length} entries; " +
-            s"link matrix was trained with F=$ff")
-        val u = bMu.value.clone()
-        var f = 0
-        while (f < x.length) {
-          val xf = x(f)
-          if (xf != 0.0) {
-            var j = 0
-            while (j < kk) { u(j) += xf * b(f)(j); j += 1 }
-          }
-          f += 1
+    SideTable.rows(xNew).map { r =>
+      SideTable.check(spec, r)
+      val ix = if (r.isNullAt(1)) null else r.getSeq[Int](1)
+      val x = r.getSeq[Double](2)
+      val b = bBeta.value
+      val u = bMu.value.clone()
+      var q = 0
+      while (q < x.length) {
+        val xf = x(q)
+        if (xf != 0.0) {
+          val f = if (ix == null) q else ix(q)
+          var j = 0
+          while (j < kk) { u(j) += xf * b(f)(j); j += 1 }
         }
-        (id, u)
-      }.toDF("id", "f")
+        q += 1
+      }
+      (r.getLong(0), u)
+    }.toDF("id", "f")
   }
 
   /** Score arbitrary cells with saved factors: for each row of `cells`

@@ -1,5 +1,6 @@
 package graft.bdf
 
+import breeze.linalg.DenseMatrix
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -9,7 +10,8 @@ import org.apache.spark.sql.functions._
   * (Macau arXiv:1509.04610 §2; BPMF ICML'08 §3).
   *
   * An Entity is a named id domain (0-based Long ids) with an optional
-  * dense side-information matrix (Macau §2.2). A Relation is a sparsely
+  * dense or sparse side-information matrix (Macau §2.2), read through
+  * [[SideTable]]. A Relation is a sparsely
   * observed measurement over a tuple of entities, stored in long/COO
   * form — one row per observed cell — which is exactly the layout of
   * the testdata fact tables (lineitem/events). Arity 2 = matrix,
@@ -19,31 +21,170 @@ import org.apache.spark.sql.functions._
 final case class Entity(
     name: String,
     numItems: Int,
-    /** Optional side info: dense (id: Long, features: Array[Double]) or
-      * sparse CSR (id: Long, indices: Array[Int], values: Array[Double]). */
+    /** Optional side info (Macau §3.2), in one of two shapes:
+      *  - dense: (id, features: array<double>), every row of one width F;
+      *  - sparse CSR: (id, indices: array<int>, values: array<double>),
+      *    as [[Macau.sideFromCoo]] builds it; F is the largest index + 1.
+      * Ids absent from the table have an all-zero feature row. Both
+      * execution modes reject, naming the column and the row: a null or
+      * out-of-range id (outside [0, numItems)), a null array, indices
+      * that do not match the values one to one or are not strictly
+      * ascending from 0 (a repeated index included), dense rows of
+      * different widths, and a non-finite value. */
     side: Option[DataFrame] = None) {
 
-  /** Feature width F of the side table — max(indices)+1 for sparse
-    * rows, size(features) for dense ones, 0 without side info — in one
-    * aggregate query that also rejects a non-finite feature. Each call
-    * runs that query again; [[Gibbs.train]] asks once per entity. */
-  def sideWidth: Int = side.fold(0) { df =>
-    val sparse = df.columns.contains("indices")
-    val xs = if (sparse) "values" else "features"
-    val width =
-      if (sparse) max(array_max(col("indices"))) + 1 else max(size(col(xs)))
-    // Spark orders NaN above +Inf: one comparison rejects NaN, ±Inf and null
-    val finite = forall(col(xs), x => coalesce(abs(x) < Double.PositiveInfinity, lit(false)))
-    val row = df.agg(width,
-      first(when(!finite, struct(col("id"), col(xs))), ignoreNulls = true)).head()
-    if (!row.isNullAt(1)) {
-      val bad = row.getStruct(1)
-      throw new IllegalArgumentException(s"entity $name side table: non-finite value in " +
-        s"column $xs at row (id=${bad.get(0)}, $xs=${bad.getSeq(1).mkString("[", ",", "]")})")
+  /** How this entity's side table is read and checked. */
+  private[bdf] def sideSpec(df: DataFrame): SideTable.Spec =
+    SideTable.spec(s"entity $name side table", df, Some(numItems.toLong))
+
+  /** Feature width F of the side table (0 without side info), in one
+    * job that also runs every row check. Each call runs that job
+    * again; [[Gibbs.train]] asks once per entity. */
+  def sideWidth: Int = side.fold(0)(df => SideTable.width(sideSpec(df), df))
+}
+
+/** The one reader of a side-information table ([[Entity.side]]): it
+  * alone looks at the table's columns. Every consumer reads the table
+  * in one row form, (id bigint, indices array<int>, null for a dense
+  * row, values array<double>), and every row passes one check. */
+private[bdf] object SideTable {
+
+  /** How a table is read: its name in messages, its shape, the id
+    * range of its rows (None: any id) and the largest width a row may
+    * reach. */
+  final case class Spec(label: String, sparse: Boolean, numItems: Option[Long], maxWidth: Int) {
+    def valuesCol: String = if (sparse) "values" else "features"
+  }
+
+  private def isSparse(df: DataFrame): Boolean = df.columns.contains("indices")
+
+  def spec(label: String, df: DataFrame, numItems: Option[Long],
+           maxWidth: Int = Int.MaxValue): Spec = Spec(label, isSparse(df), numItems, maxWidth)
+
+  /** The table in row form: a narrow projection, so it keeps the
+    * table's partitioning. */
+  def rows(df: DataFrame): DataFrame = {
+    val sparse = isSparse(df)
+    df.select(col("id").cast("long").as("id"),
+      (if (sparse) col("indices") else lit(null)).cast("array<int>").as("indices"),
+      col(if (sparse) "values" else "features").cast("array<double>").as("values"))
+  }
+
+  /** The first fault of one row in row form, as (column, fault), or
+    * null if it has none. */
+  private def fault(s: Spec, r: Row): (String, String) = {
+    def finite(x: Any) = x != null && java.lang.Double.isFinite(x.asInstanceOf[Double])
+    if (r.isNullAt(0)) ("id", "null id")
+    else if (s.numItems.exists(n => r.getLong(0) < 0 || r.getLong(0) >= n))
+      ("id", s"id outside [0, ${s.numItems.get})")
+    else if (r.isNullAt(2)) (s.valuesCol, "null array")
+    else if (s.sparse && r.isNullAt(1)) ("indices", "null array")
+    else {
+      val v = r.getSeq[Any](2)
+      val ixFault = if (!s.sparse) {
+        if (v.length > s.maxWidth) s"width ${v.length}, more than F=${s.maxWidth}" else null
+      } else {
+        val ix = r.getSeq[Any](1)
+        if (ix.length != v.length) s"indices and values of lengths ${ix.length} and ${v.length}"
+        else ix.indices.collectFirst {
+          case q if ix(q) == null => "null index"
+          case q if ix(q).asInstanceOf[Int] < 0 => "negative index"
+          case q if q > 0 && ix(q).asInstanceOf[Int] <= ix(q - 1).asInstanceOf[Int] =>
+            "repeated or unsorted index"
+          case q if ix(q).asInstanceOf[Int] >= s.maxWidth => s"index outside [0, ${s.maxWidth})"
+        }.orNull
+      }
+      if (ixFault != null) (if (s.sparse) "indices" else "features", ixFault)
+      else if (!v.forall(finite)) (s.valuesCol, "non-finite value")
+      else null
     }
-    require(!row.isNullAt(0), s"side table for entity $name " +
-      (if (sparse) "has no nonzero features" else "is empty"))
-    row.getInt(0)
+  }
+
+  private def reject(s: Spec, r: Row, f: (String, String)): Nothing = {
+    val (c, what) = f
+    val shown = if (c == "id") "" else {
+      val a = r.getSeq[Any](if (c == "indices") 1 else 2)
+      s", $c=${if (a == null) "null" else a.mkString("[", ",", "]")}"
+    }
+    throw new IllegalArgumentException(
+      s"${s.label}: $what in column $c at row (id=${if (r.isNullAt(0)) "null" else r.getLong(0)}$shown)")
+  }
+
+  /** Reject one row in row form if it has a fault. */
+  def check(s: Spec, r: Row): Unit = {
+    val f = fault(s, r)
+    if (f != null) reject(s, r, f)
+  }
+
+  /** One partition's part of the table's checks: its width (the
+    * largest index + 1 of sparse rows, the first row's length for dense
+    * ones), its first row if that row has no fault, and its first
+    * faulty row with the fault. A dense row whose length differs from
+    * the partition's first row is faulty. */
+  private final case class Part(width: Int, first: Row, bad: Row, fault: (String, String))
+
+  private def ragged(len: Int, ref: Int) = ("features", s"width $len, not $ref like the first row")
+
+  private def scan(s: Spec, it: Iterator[Row]): Part = {
+    var width = if (s.sparse) 0 else -1
+    var first, bad: Row = null
+    var why: (String, String) = null
+    var start = true
+    while (bad == null && it.hasNext) {
+      val r = it.next()
+      var f = fault(s, r)
+      if (f == null) {
+        if (s.sparse) {
+          val ix = r.getSeq[Int](1)
+          if (ix.nonEmpty) width = math.max(width, ix.last + 1)
+        } else {
+          val len = r.getSeq[Any](2).length
+          if (start) { first = r; width = len } else if (len != width) f = ragged(len, width)
+        }
+      }
+      if (f != null) { bad = r; why = f }
+      start = false
+    }
+    Part(width, first, bad, why)
+  }
+
+  /** Reject the first faulty row in partition order, or return the
+    * table's width. Folding the parts in partition order finds the row
+    * that one scan of the whole table would. */
+  private def widthOf(s: Spec, parts: Seq[Part]): Int = {
+    val ref = parts.find(_.first != null).fold(-1)(_.width)
+    parts.foreach { p =>
+      if (p.first != null && p.width != ref) reject(s, p.first, ragged(p.width, ref))
+      if (p.bad != null) reject(s, p.bad, p.fault)
+    }
+    val w = if (s.sparse) parts.map(_.width).max else ref
+    require(w > 0, s"${s.label} " + (if (s.sparse) "has no nonzero features" else "is empty"))
+    w
+  }
+
+  /** Feature width F, in one job that also runs every row check: it
+    * reads the table once and caches nothing, so a rejected table leaves
+    * no cache behind. */
+  def width(s: Spec, df: DataFrame): Int =
+    widthOf(s, rows(df).rdd.mapPartitions(it => Iterator(scan(s, it))).collect().toSeq)
+
+  /** The N x F matrix X, collected and checked on the driver. A dense
+    * table's width is its rows' length, so it costs no job of its own.
+    * A sparse table's width is taken from `sparseWidth`, the width job
+    * the auto mode switch may already have run, so that an explicit
+    * broadcast train runs the jobs of an auto-routed one. */
+  def matrix(s: Spec, df: DataFrame, sparseWidth: => Int): DenseMatrix[Double] = {
+    val rs = rows(df).collect()
+    val w = widthOf(s, Seq(scan(s, rs.iterator)))
+    val x = DenseMatrix.zeros[Double](s.numItems.get.toInt, if (s.sparse) sparseWidth else w)
+    rs.foreach { r =>
+      val i = r.getLong(0).toInt
+      val v = r.getSeq[Double](2)
+      val ix = if (r.isNullAt(1)) null else r.getSeq[Int](1)
+      var q = 0
+      while (q < v.length) { x(i, if (ix == null) q else ix(q)) = v(q); q += 1 }
+    }
+    x
   }
 }
 

@@ -8,6 +8,13 @@ import graft.SparkSpec
   * accumulation), and both must actually solve the normal equations. */
 class CgSpec extends SparkSpec {
 
+  /** Dense rows in the solver's row form: (indices = null, values, target). */
+  private def denseDF(rows: Seq[(Seq[Double], Seq[Double])]) = {
+    val s = spark
+    import s.implicits._
+    rows.map { case (x, t) => (null: Seq[Int], x, t) }.toDF("indices", "values", "target")
+  }
+
   private def mkRows(n: Int, f: Int, k: Int): Seq[(Seq[Double], Seq[Double])] =
     (0 until n).map { i =>
       // ~60% sparse deterministic pattern
@@ -27,22 +34,20 @@ class CgSpec extends SparkSpec {
     // accumulation order in both treeAggregates (a DataFrame
     // .repartition would NOT preserve this: round-robin sorts rows by
     // their binary representation first, which differs per schema)
-    val dense = rows.toDF("features", "target")
+    val dense = denseDF(rows)
     val sparse = rows.map { case (x, t) =>
       val nz = x.zipWithIndex.filter(_._1 != 0.0)
       (nz.map(_._2), nz.map(_._1), t)
     }.toDF("indices", "values", "target")
     val bDense = Cg.solveNormal(spark, dense, f, k, lambda = 2.5)
-    val bSparse = Cg.solveNormalSparse(spark, sparse, f, k, lambda = 2.5)
+    val bSparse = Cg.solveNormal(spark, sparse, f, k, lambda = 2.5)
     assert(bDense === bSparse)
   }
 
   test("CG solves the normal equations (vs direct solve)") {
-    val s = spark
-    import s.implicits._
     val n = 50; val f = 8; val k = 2
     val rows = mkRows(n, f, k)
-    val beta = Cg.solveNormal(spark, rows.toDF("features", "target"), f, k,
+    val beta = Cg.solveNormal(spark, denseDF(rows), f, k,
       lambda = 1.5, maxIter = 200, tol = 1e-24)
     // driver-side reference: (X^T X + lambda I)^-1 X^T T
     val x = DenseMatrix.tabulate[Double](n, f)((i, j) => rows(i)._1(j))
@@ -54,11 +59,9 @@ class CgSpec extends SparkSpec {
   }
 
   test("rhsExtra shifts the solution by A^-1 rhsExtra") {
-    val s = spark
-    import s.implicits._
     val n = 40; val f = 6; val k = 2
     val rows = mkRows(n, f, k)
-    val df = rows.toDF("features", "target")
+    val df = denseDF(rows)
     val extra = DenseMatrix.tabulate[Double](f, k)((i, c) =>
       CbRng.gaussian(7L, 3L, i.toLong, c.toLong))
     val b0 = Cg.solveNormal(spark, df, f, k, 2.0, maxIter = 200, tol = 1e-24)

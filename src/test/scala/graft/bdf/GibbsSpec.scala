@@ -287,6 +287,88 @@ class GibbsSpec extends SparkSpec {
     assert(d1.rmseHistory === d2.rmseHistory)
   }
 
+  /** One X in both side-table shapes: `side`'s dense rows with about a
+    * third of the entries and every tenth row set to zero, as a dense
+    * table and as a sparse one, which leaves the all-zero rows out. */
+  private def bothShapes(side: org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    val s = spark
+    import s.implicits._
+    val xs = side.collect().map { r =>
+      val id = r.getLong(0)
+      (id, r.getSeq[Double](1).zipWithIndex.map { case (x, f) =>
+        if (id % 10 == 0 || (id + f) % 3 == 0) 0.0 else x })
+    }
+    val sparse = xs.filterNot(_._1 % 10 == 0).map { case (id, x) =>
+      val nz = x.zipWithIndex.filter(_._1 != 0.0)
+      (id, nz.map(_._2), nz.map(_._1))
+    }
+    (xs.toSeq.toDF("id", "features"), sparse.toSeq.toDF("id", "indices", "values"))
+  }
+
+  test("a sparse and a dense side table of the same X train to the same factors, both modes") {
+    val (rd, test, _) = linkedMacau(42L)
+    val (dense, sparse) = bothShapes(rd.entities("row").side.get)
+    def withSide(side: org.apache.spark.sql.DataFrame) =
+      rd.copy(entities = rd.entities.updated("row", rd.entities("row").copy(side = Some(side))))
+    for (distributed <- Seq(false, true)) {
+      val opts = Gibbs.Options(numLatent = 4, burnin = 3, samples = 2, seed = 42L,
+        distributedFactors = Some(distributed))
+      val d = Gibbs.train(spark, withSide(dense), test, opts)
+      val sp = Gibbs.train(spark, withSide(sparse), test, opts)
+      val mode = s"distributed=$distributed"
+      if (!distributed) {
+        assert(factorBits(sp) === factorBits(d), mode)
+        assert(cellBits(sp) === cellBits(d), mode)
+        assert(bits(sp.rmseHistory) === bits(d.rmseHistory), mode)
+        assert(bits(sp.links("row").flatten.toSeq) === bits(d.links("row").flatten.toSeq), mode)
+      } else {
+        // the sparse table has fewer rows, so the joins on it and on its
+        // link shift can place rows in other partitions, and the
+        // per-partition sums then add in another order: equal to
+        // relative 1e-12, not bit for bit
+        def close(a: Seq[Double], b: Seq[Double]) = a.length == b.length && a.zip(b).forall {
+          case (x, y) => math.abs(x - y) <= 1e-12 * math.max(math.abs(x), math.abs(y)) }
+        def values(r: Gibbs.Result) = r.factors.toSeq.sortBy(_._1).flatMap { case (_, df) =>
+          df.collect().sortBy(_.getLong(0)).flatMap(_.getSeq[Double](1)) }
+        assert(close(values(sp), values(d)), mode)
+        assert(close(sp.rmseHistory, d.rmseHistory), mode)
+        assert(close(sp.links("row").flatten.toSeq, d.links("row").flatten.toSeq), mode)
+      }
+    }
+  }
+
+  test("cold start reads a sparse xNew as the dense one of the same X, bit for bit") {
+    val s = spark
+    import s.implicits._
+    val (rd, test, _) = linkedMacau(42L)
+    val (_, sparseSide) = bothShapes(rd.entities("row").side.get)
+    // a model trained on the sparse shape, as Macau.sideFromCoo builds it
+    val res = Gibbs.train(spark,
+      rd.copy(entities = rd.entities.updated("row", rd.entities("row").copy(side = Some(sparseSide)))),
+      test, Gibbs.Options(numLatent = 4, burnin = 2, samples = 1, seed = 42L))
+    // new ids; one all-zero row, given as an empty sparse row
+    val newSide = rd.entities("row").side.get.filter($"id" < 20)
+      .select(($"id" + 1000L).as("id"), $"features")
+    val (dense, sparse) = bothShapes(newSide)
+    val sparseAll = sparse.unionByName(
+      dense.filter($"id" % 10 === 0).select($"id", expr("array()").cast("array<int>").as("indices"),
+        expr("array()").cast("array<double>").as("values")))
+    def coldBits(x: org.apache.spark.sql.DataFrame) =
+      Macau.coldStartFactors(spark, res, "row", x).collect()
+        .map(r => r.getLong(0) -> bits(r.getSeq[Double](1))).toMap
+    val fromDense = coldBits(dense)
+    assert(fromDense.size === 20)
+    assert(coldBits(sparseAll) === fromDense)
+    // an index at F or beyond is rejected with its id
+    val tooWide = Seq((2000L, Seq(1, 5), Seq(1.0, 2.0))).toDF("id", "indices", "values")
+    val e = intercept[Exception](Macau.coldStartFactors(spark, res, "row", tooWide).collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("cold-start side table: index outside [0, 5) in column indices " +
+      "at row (id=2000, indices=[1,5])")), messages.mkString("\n"))
+  }
+
   test("distributed-factors mode with SPARSE side info (CSR one-hot rows)") {
     val s = spark
     import s.implicits._
@@ -674,38 +756,10 @@ class GibbsSpec extends SparkSpec {
   }
 
   /** The job group ("" outside one) of every Spark job started while `run`
-    * runs, in start order, and the shuffle bytes written. A marker job
-    * runs first: the listener bus delivers events in order, so once the
-    * marker's start arrives no earlier job's event is still queued. */
+    * runs, in start order, and the shuffle bytes written. */
   private def jobsRun(run: => Unit): (Seq[String], Long) = {
-    val sc = spark.sparkContext
-    val marker = s"jobs-run-marker-${System.nanoTime()}"
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0)
-    @volatile var counting = false
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val group = Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse("")
-        if (counting) groups.add(group) else if (group == marker) counting = true
-      }
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (counting && e.taskMetrics != null)
-          bytes.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(marker, "marker", interruptOnCancel = false)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      while (!counting) Thread.sleep(20)
-      run
-      // the listener bus is asynchronous: wait until both counts settle
-      var prev = (-1, -1L)
-      while ((groups.size, bytes.get()) != prev) {
-        prev = (groups.size, bytes.get()); Thread.sleep(200)
-      }
-      (groups.toArray(Array.empty[String]).toSeq, prev._2)
-    } finally sc.removeSparkListener(listener)
+    val c = graft.JobCount(spark.sparkContext)(run)
+    (c.groups, c.shuffleBytes)
   }
 
   /** Spark jobs started and shuffle bytes written while `run` runs. */

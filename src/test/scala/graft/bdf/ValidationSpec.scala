@@ -69,4 +69,68 @@ class ValidationSpec extends SparkSpec {
       assert(msg.contains("at row (id=5, values=[-Infinity])"), msg)
     }
   }
+
+  /** The message of a train with `side` on entity row, per mode. */
+  private def sideFault(side: DataFrame): Seq[(Boolean, String)] =
+    Seq(false, true).map(d => d -> train(rd(cells(), Some(side)), d))
+
+  private def sparseSide(id: Long, indices: Seq[Int], values: Seq[Double]): DataFrame = {
+    val s = spark
+    import s.implicits._
+    ((0 until 6).filterNot(_ == id).map(i => (i.toLong, Seq(i % 3), Seq(1.0))) :+
+      ((id, indices, values))).toDF("id", "indices", "values")
+  }
+
+  private def denseSide(id: Long, features: Array[Double]): DataFrame = {
+    val s = spark
+    import s.implicits._
+    ((0 until 6).filterNot(_ == id).map(i => (i.toLong, Array(1.0, i.toDouble))) :+
+      ((id, features))).toDF("id", "features")
+  }
+
+  private def assertFault(side: DataFrame, expected: String): Unit =
+    for ((distributed, msg) <- sideFault(side))
+      assert(msg.contains(expected), s"distributed=$distributed: $msg")
+
+  test("a repeated or unsorted sparse index is rejected, both modes") {
+    assertFault(sparseSide(3, Seq(1, 1), Seq(1.0, 2.0)), "entity row side table: repeated or " +
+      "unsorted index in column indices at row (id=3, indices=[1,1])")
+    assertFault(sparseSide(3, Seq(2, 0), Seq(1.0, 2.0)), "entity row side table: repeated or " +
+      "unsorted index in column indices at row (id=3, indices=[2,0])")
+  }
+
+  test("sparse indices and values of different lengths are rejected, both modes") {
+    assertFault(sparseSide(2, Seq(0, 1), Seq(1.0)),
+      "entity row side table: indices and values of lengths 2 and 1 in column indices at row (id=2, indices=[0,1])")
+    assertFault(sparseSide(2, Seq(0), Seq(1.0, 2.0)),
+      "entity row side table: indices and values of lengths 1 and 2 in column indices at row (id=2, indices=[0])")
+  }
+
+  test("a negative sparse index is rejected, both modes") {
+    assertFault(sparseSide(4, Seq(-1, 2), Seq(1.0, 2.0)),
+      "entity row side table: negative index in column indices at row (id=4, indices=[-1,2])")
+  }
+
+  test("dense side rows of different widths are rejected, both modes") {
+    assertFault(denseSide(2, Array(1.0, 2.0, 3.0)), "entity row side table: width 3, not 2 " +
+      "like the first row in column features at row (id=2, features=[1.0,2.0,3.0])")
+    assertFault(denseSide(2, Array(1.0)), "entity row side table: width 1, not 2 " +
+      "like the first row in column features at row (id=2, features=[1.0])")
+  }
+
+  test("a side id outside [0, numItems) is rejected, both modes") {
+    assertFault(denseSide(6, Array(1.0, 2.0)),
+      "entity row side table: id outside [0, 6) in column id at row (id=6)")
+    assertFault(sparseSide(-1, Seq(0), Seq(1.0)),
+      "entity row side table: id outside [0, 6) in column id at row (id=-1)")
+  }
+
+  test("a null side array is rejected, both modes") {
+    assertFault(denseSide(1, null),
+      "entity row side table: null array in column features at row (id=1, features=null)")
+    assertFault(sparseSide(1, null, Seq(1.0)),
+      "entity row side table: null array in column indices at row (id=1, indices=null)")
+    assertFault(sparseSide(1, Seq(0), null),
+      "entity row side table: null array in column values at row (id=1, values=null)")
+  }
 }

@@ -29,29 +29,9 @@ class ShuffleSpec extends SparkSpec {
     * checkpointed stage runs as its own job, invisible to the final
     * plan, which would blind the tripwire to exactly the upstream
     * regressions it exists to catch). The DataFrame is built by-name
-    * INSIDE the listener window; the async listener bus is polled
-    * until the byte count settles. */
-  private def shuffleBytes(mk: => DataFrame): Long = {
-    val total = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (m != null) total.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val df = mk
-      df.collect()
-      var prev = -1L
-      var spins = 0
-      while (total.get() != prev && spins < 50) {
-        prev = total.get(); Thread.sleep(100); spins += 1
-      }
-      total.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+    * INSIDE the counted block. */
+  private def shuffleBytes(mk: => DataFrame): Long =
+    graft.JobCount(spark.sparkContext)(mk.collect()).shuffleBytes
 
   test("minhash LSH shuffles signatures, never the shingle blow-up") {
     val b = shuffleBytes(Llm.qDedupMinhashLsh(spark, sf("sf0.01")))
